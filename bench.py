@@ -27,7 +27,8 @@ BENCH_FULL.json; the printed one-line JSON keeps the headline fields
 plus as many per-query entries as fit under ~1.8 kB (failures and
 slowest queries first), because the harness records only the last
 2 kB of output — round 1's all-inline line was truncated there and
-recorded as unparseable.
+recorded as unparseable. Both carry `n_failed` and the `failed` query
+names; a run with any failure exits 1.
 """
 
 from __future__ import annotations
@@ -177,6 +178,10 @@ def main() -> None:
     timings = {n: round(t, 2) for n, t in timings.items()}
 
     cal_after = _calibrate(spark)
+    # a failed query is timed as -1 and left out of the total, so the
+    # run reports its failures and exits non-zero: a total with a hole
+    # in it must never read as a speedup
+    failed = sorted(n for n, t in timings.items() if t < 0)
     total = round(sum(t for t in timings.values() if t >= 0), 2)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -186,6 +191,7 @@ def main() -> None:
     # queries inline was truncated and recorded as unparseable).
     full = {"metric": "total_query_wall_time", "value": total,
             "unit": "sec", "queries": timings, "sf": sf_val,
+            "n_failed": len(failed), "failed": failed,
             "calibration_before": cal_before,
             "calibration_after": cal_after,
             "calibration_midrun": cal_mid}
@@ -217,6 +223,7 @@ def main() -> None:
                  and mid_max <= 0.45)
     out = {"metric": "total_query_wall_time", "value": total, "unit": "sec",
            "queries": line_qs, "sf": sf_val, "n_queries": len(timings),
+           "n_failed": len(failed), "failed": failed,
            "other_sec": 0.0, "other_n": 0, "full": "BENCH_FULL.json",
            "cal": [cal_before["spark_1task_sec"],
                    cal_after["spark_1task_sec"],
@@ -233,6 +240,8 @@ def main() -> None:
     out["other_sec"] = round(sum(t for t in rest if t >= 0), 2)
     out["other_n"] = len(rest)
     print(dumps())
+    if failed:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

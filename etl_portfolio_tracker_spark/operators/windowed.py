@@ -168,40 +168,82 @@ def user_price_panel(trades: DataFrame, prices: DataFrame) -> DataFrame:
     (tests/test_portfolio_twr_parity.py pins equality against the
     intent-realized pandas form).
 
-    Scale: |users|·|their tickers|·|grid days| rows — the honest cost
-    of per-user panels; every join/window below is keyed by user (and
-    ticker), so the whole pipeline partitions horizontally with no
-    global exchange. prices/user_tickers are per-key aggregates of
-    the fact (dimension-sized relative to it).
+    Physical shape — one linear, user-partitioned pipeline:
+
+      trades ─▶ Exchange hash(user) ─▶ one row per user (trade list)
+        ─▶ explode trades + one probe per held ticker
+        ─▶ ⋈ broadcast (ticker, ts, close)      [probes only]
+        ─▶ (user, ts) aggregate: grid flag, that day's cells
+        ─▶ explode over the user's ticker set
+        ─▶ cumulative-qty window, grid filter, interpolate
+
+    The trade side has exactly ONE exchange, hash(user); the price
+    dimension is broadcast once; everything after the exchange is a
+    user-keyed aggregate or window, a generator or a broadcast join,
+    all of which keep hash(user). A caller whose windows and
+    aggregates stay on user / (user, ts) / (user, ticker) keys
+    inherits the same single exchange. The shape depends on these
+    Spark rules (checked on Spark 4.1.2, default confs):
+
+      * a shuffled join keeps hash(user) only when joined on `user`
+        ALONE (spark.sql.requireAllClusterKeysForCoPartition is true,
+        so a (user, ticker, ts) join re-shuffles both sides);
+      * a full-outer sort-merge join outputs UnknownPartitioning;
+      * two branches of one DataFrame that prune to different columns
+        plan their own exchange instead of reusing one; a Union of
+        same-partitioned children does keep the partitioning.
+
+    So the panel has no self-join and no fork: trades and grid days
+    meet in one (user, ts) aggregate instead of a full-outer join, and
+    the spine comes from a generator over the user's ticker set
+    instead of a join. tests/test_plan_audit.py pins the exchange
+    count, the absence of sort-merge joins and the job count.
+
+    Scale: |users|·|their tickers|·|grid ∪ trade days| rows — the
+    honest cost of per-user panels — spread over hash(user); a user's
+    trade list and ticker set are held in one row.
     """
     from .calendar import interpolate
 
-    # ut and px each feed two consumers (grid + spine) and Spark does
-    # not share subplans, so both aggregates appear twice in the plan.
-    # Measured at sf0.1 a localCheckpoint boundary here is a net LOSS
-    # (materialization overhead > the cheap re-agg: 2.7-3.3 s vs
-    # 2.2-2.4 s for basket_index); at 100 TB the production shape is a
-    # materialized prices/trades table (the reference's `prices` IS a
-    # table), which removes the duplication at the source.
-    ut = trades.select("user", "ticker").distinct()
+    trade = F.struct("ticker", F.to_date("ts").alias("ts"),
+                     signed_qty().alias("q"))
+    # null users never join a grid (the reference's per-user panel)
+    users = (trades.filter(F.col("user").isNotNull())
+             .groupBy("user").agg(F.collect_list(trade).alias("_tr")))
+    tks = F.array_distinct(F.col("_tr.ticker"))
+    probes = F.transform(tks, lambda t: F.struct(
+        t.alias("ticker"), F.lit(None).cast("date").alias("ts"),
+        F.lit(None).cast("double").alias("q")))
+    events = users.select("user", tks.alias("_tks"),
+                          F.inline(F.concat("_tr", probes)))
+    # a probe (q null) fans out to every priced day of its ticker; a
+    # trade row has a null key and passes through. An unpriced probe
+    # lands on a null day, which is never a grid day.
     px = prices.select(F.col("ticker").alias("_pt"),
                        F.col("ts").alias("_pts"), "close")
-    grid = (ut.join(px, ut.ticker == F.col("_pt"))
-            .select("user", F.col("_pts").alias("ts")).distinct())
-    spine = (grid.join(ut, "user")
-             .join(px, (F.col("ticker") == F.col("_pt"))
-                   & (F.col("ts") == F.col("_pts")), "left")
-             .select("user", "ticker", "ts", "close",
-                     F.lit(1).alias("_grid")))
-    deltas = (trades
-              .groupBy("user", "ticker", F.to_date("ts").alias("ts"))
-              .agg(F.sum(signed_qty()).alias("_delta")))
-    merged = spine.join(deltas, ["user", "ticker", "ts"], "full_outer")
+    key = F.when(F.col("q").isNull(), F.col("ticker"))
+    days = (events.join(F.broadcast(px), key == F.col("_pt"), "left")
+            .groupBy("user", F.coalesce("ts", "_pts").alias("ts"))
+            .agg(F.first("_tks").alias("_tks"),
+                 F.max(F.col("close").isNotNull()).alias("_grid"),
+                 F.collect_list(F.struct("ticker", "q", "close"))
+                 .alias("_c")))
+
+    def ticker_cell(t):
+        mine = F.filter("_c", lambda c: c.ticker.eqNullSafe(t))
+        return F.struct(
+            t.alias("ticker"),
+            F.aggregate(mine, F.lit(0.0),
+                        lambda a, c: a + F.coalesce(c.q, F.lit(0.0)))
+            .alias("_delta"),
+            F.array_max(F.transform(mine, lambda c: c.close)).alias("close"))
+
+    cells = days.select("user", "ts", "_grid",
+                        F.inline(F.transform("_tks", ticker_cell)))
     w_cum = (W.partitionBy("user", "ticker").orderBy("ts")
              .rowsBetween(W.unboundedPreceding, W.currentRow))
-    qty = F.sum(F.coalesce("_delta", F.lit(0.0))).over(w_cum)
-    on_grid = (merged.withColumn("qty", qty)
-               .filter(F.col("_grid").isNotNull())
+    on_grid = (cells.withColumn("qty", F.sum("_delta").over(w_cum))
+               .filter(F.col("_grid"))
                .select("user", "ticker", "ts", "close", "qty"))
     return (interpolate(on_grid, "close", "close_i",
                         keys=("user", "ticker"))
@@ -233,8 +275,10 @@ def portfolio_twr(trades: DataFrame, prices: DataFrame) -> DataFrame:
     at 0 thereafter — the cumprod 0 factor); final index rounded 6dp
     (libm last-ulp).
 
-    Scale: aggregates key on (user, d) / user; windows on
-    (user[, ticker]); no global window, no collect.
+    Scale: aggregates key on (user, d); windows on (user[, ticker]),
+    the first-held-day trim included — all satisfied by the panel's
+    single hash(user) exchange, so the query adds none; no global
+    window.
     """
     panel = user_price_panel(trades, prices)
     w = W.partitionBy("user", "ticker").orderBy("ts")
@@ -249,14 +293,17 @@ def portfolio_twr(trades: DataFrame, prices: DataFrame) -> DataFrame:
     daily = (cells.groupBy("user", "ts")
              .agg(dsum(F.col("_hv")).alias("_tot"),
                   dsum(F.col("_hv") * F.col("_ret")).alias("_num")))
-    fh = (daily.filter(F.col("_tot") > 0)
-          .groupBy("user").agg(F.min("ts").alias("_fh")))
+    # first held day per user as a window, not a self-join: a join
+    # back onto `daily` would re-plan the whole panel a second time
+    fh = F.min(F.when(F.col("_tot") > 0, F.col("ts"))).over(
+        W.partitionBy("user"))
     port_ret = (F.when(F.col("_tot") == 0, F.lit(0.0))
                 .otherwise(F.col("_num").cast("double")
                            / F.col("_tot").cast("double")))
-    trimmed = (daily.join(fh, "user")
+    trimmed = (daily.select("user", "ts", port_ret.alias("_pr"),
+                            fh.alias("_fh"))
                .filter(F.col("ts") >= F.col("_fh"))
-               .select("user", "ts", port_ret.alias("_pr")))
+               .select("user", "ts", "_pr"))
     w_idx = (W.partitionBy("user").orderBy("ts")
              .rowsBetween(W.unboundedPreceding, W.currentRow))
     # twr_index's total-loss rule: a day with port_ret <= -1 pins the
@@ -340,14 +387,16 @@ def twr_with_benchmark(trades: DataFrame, prices: DataFrame,
     benchmark_overlay, unpivot_panel) as ONE registered query — the
     reference's flagship page reference-complete end-to-end.
 
-    Scale: portfolio_twr's per-user shape plus two per-user windows
-    and a broadcast-able benchmark join (one row per calendar day);
-    the melt is a row-local stack, no shuffle.
+    Scale: portfolio_twr's single hash(user) exchange, then a
+    broadcast benchmark join (one row per calendar day) and two
+    per-user windows that keep that partitioning; the melt is a
+    row-local stack. The only other exchange over the panel is the
+    final orderBy's range shuffle of the chart frame.
     """
     twr = portfolio_twr(trades, prices).select("user", "d", "twr_idx")
     b = bench.select(F.col("ts").alias("_bts"),
                      F.col("close").alias("_bc"))
-    j = twr.join(b, twr.d == F.col("_bts"), "left").drop("_bts")
+    j = twr.join(F.broadcast(b), twr.d == F.col("_bts"), "left").drop("_bts")
     wc = (W.partitionBy("user").orderBy("d")
           .rowsBetween(W.unboundedPreceding, W.currentRow))
     wf = (W.partitionBy("user").orderBy("d")

@@ -12,14 +12,10 @@ t2 gate — run on the harness data itself, not a stand-in.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as E  # noqa: E402
-from etl_portfolio_tracker_spark.io import read_table  # noqa: E402
+import __spark_entry__ as E
+from etl_portfolio_tracker_spark.io import read_table
 
 # Column-name → dtype invariants the operator layer relies on.  `ts`
 # must read as a (naive) timestamp, never a raw long; keys stay bigint.

@@ -2,6 +2,8 @@
 posture depends on, checked on real sf0.001 data so regressions in
 join strategy / pushdown / pruning fail CI, not the cluster."""
 
+import pytest
+
 from etl_portfolio_tracker_spark import derive
 from etl_portfolio_tracker_spark.operators import headline as HL
 from etl_portfolio_tracker_spark.plans import (
@@ -626,3 +628,47 @@ def test_ivf_balance_single_assignment_scan(spark):
     # only the cell agg and ivf_assign's own _spread repartition
     assert all("cell" in e or "REPARTITION_BY_NUM" in e
                for e in hash_ex)
+
+
+# --- per-user TWR panel: one user exchange, no sort-merge join -------------
+
+# jobs per query at sf0.001 (AQE runs one job per shuffle stage)
+PANEL_JOB_CAPS = {"portfolio_twr": 4, "portfolio_value_series": 6,
+                  "twr_with_benchmark": 8}
+
+
+def _jobs_launched(spark, df) -> int:
+    import uuid
+    sc = spark.sparkContext
+    group = "plan-audit-" + uuid.uuid4().hex[:8]
+    sc.setJobGroup(group, group)
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_portfolio_twr_single_user_exchange(spark):
+    # user_price_panel is one linear pipeline: the trades scan reaches
+    # exactly one shuffle, hash(user) alone; the only other exchange
+    # is the (ticker, ts) price aggregate under the broadcast. A join
+    # on (user, ticker, ts) would re-shuffle on all three keys.
+    import re
+    import __spark_entry__ as E
+    from etl_portfolio_tracker_spark.plans import physical_plan
+    q = E.queries()["portfolio_twr"](spark, SF)
+    user_ex = exchanges(q, "user")
+    assert len(user_ex) == 1
+    assert re.search(r"hashpartitioning\(user#\d+, \d+\)", user_ex[0])
+    assert all(e in user_ex or "hashpartitioning(ticker" in e
+               for e in exchanges(q))
+    assert "SortMergeJoin" not in physical_plan(q)
+
+
+@pytest.mark.parametrize("name", sorted(PANEL_JOB_CAPS))
+def test_panel_queries_job_count(spark, name):
+    import __spark_entry__ as E
+    q = E.queries()[name](spark, SF)
+    assert _jobs_launched(spark, q) <= PANEL_JOB_CAPS[name]

@@ -179,8 +179,6 @@ def test_streaming_twr_matches_batch_sf0001(spark):
     """availableNow replay of the daily panel marks == batch
     portfolio_twr, bit-for-bit (also gated externally: the oracle is
     the portfolio_twr SQL verbatim)."""
-    import sys
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as E
     from etl_portfolio_tracker_spark import derive
     from etl_portfolio_tracker_spark.operators import windowed as WD

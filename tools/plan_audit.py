@@ -9,10 +9,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
 from etl_portfolio_tracker_spark.session import get_spark  # noqa: E402

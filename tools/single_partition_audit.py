@@ -23,10 +23,11 @@ Exit code 1 if any non-allowlisted query exceeds the threshold.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 THRESHOLD = 1000
 

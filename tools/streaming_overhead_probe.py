@@ -19,11 +19,12 @@ Usage: python tools/streaming_overhead_probe.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import uuid
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 

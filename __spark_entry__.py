@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import os
 import sys
-import threading
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -25,11 +24,13 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from etl_portfolio_tracker_spark import derive
-from etl_portfolio_tracker_spark.io import read_table, table_num_rows
+from etl_portfolio_tracker_spark.io import (
+    read_table, table_num_rows, table_stamp)
 from etl_portfolio_tracker_spark.oracle import (
     FOLD_FINALS_SQL, OVERSELL_SQL, PRICES_CTE, RAW_TRADES_CTE,
     STREAM_FOLD_SQL, TICK_PRICES_CTE, TRADES_CTE, UNIVERSE_CTE, with_domain,
 )
+from etl_portfolio_tracker_spark.memo import session_memo
 from etl_portfolio_tracker_spark.operators import asof as AS
 from etl_portfolio_tracker_spark.operators import bpe as BPE
 from etl_portfolio_tracker_spark.operators import calendar as C
@@ -948,37 +949,21 @@ def _q_sliding_rollup(spark, sf_dir):
     return SE.sliding_rollup(read_table(spark, sf_dir, "events"))
 
 
-_DOCS_CACHE: dict = {}
-_DOCS_LOCK = threading.Lock()
-
-
 def _docs(spark, sf_dir):
     """Documents reader for the registry: the harness table is ONE
     parquet split, so every token/shingle/char explode downstream
     inherited a single-partition layout and ran its map stage on one
-    core (r9-opt, guide §2.5; measured: a 16-query text/sketch batch
-    dropped 40.7 → 28.4 s best-of-2 from this spread alone —
-    char_entropy 3.5 → 0.9, bpe_token_counts 6.3 → 2.4). spread() is
-    a no-op on a cluster where the table arrives in real splits. The
-    spread frame is memoized per (app, sf_dir) like read_table, so
-    the .rdd partition-count probe runs once per session."""
+    core (guide §2.5; measured: a 16-query text/sketch batch dropped
+    40.7 → 28.4 s best-of-2 from this spread alone — char_entropy
+    3.5 → 0.9, bpe_token_counts 6.3 → 2.4). spread() is a no-op on a
+    cluster where the table arrives in real splits. The spread frame
+    is session-memoized per sf_dir like read_table, so the .rdd
+    partition-count probe runs once per session."""
     from etl_portfolio_tracker_spark.functions.partitioning import spread
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    hit = _DOCS_CACHE.get(key)
-    if hit is None:
-        # lock: _curation's thread pool calls this concurrently
-        # (ADVICE r9) — avoid duplicate partition-count probes and
-        # eviction/insert interleavings
-        with _DOCS_LOCK:
-            hit = _DOCS_CACHE.get(key)
-            if hit is None:
-                for stale in [k for k in _DOCS_CACHE if k[0] != app]:
-                    _DOCS_CACHE.pop(stale, None)
-                hit = spread(read_table(spark, sf_dir, "documents"),
-                             "doc_id")
-                _DOCS_CACHE[key] = hit
-    return hit
+    return session_memo(
+        spark, ("docs", sf_dir),
+        lambda: spread(read_table(spark, sf_dir, "documents"), "doc_id"),
+        stamp=table_stamp(sf_dir, "documents"))
 
 
 _CURATION_STATE: dict = {}

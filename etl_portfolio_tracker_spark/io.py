@@ -20,9 +20,20 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .memo import session_memo
+
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def table_files(sf_dir: str, name: str) -> list[str]:
+    """The parquet files of a harness table (a file or a directory)."""
+    p = table_path(sf_dir, name)
+    if os.path.isdir(p):
+        return sorted(os.path.join(p, f) for f in os.listdir(p)
+                      if f.endswith(".parquet"))
+    return [p]
 
 
 def table_num_rows(sf_dir: str, name: str) -> int:
@@ -32,39 +43,42 @@ def table_num_rows(sf_dir: str, name: str) -> int:
     Used to size model-scale knobs (e.g. the SemDeDup codebook's
     n_cells) without a driver-blocking count() before the main job."""
     import pyarrow.parquet as pq
-    p = table_path(sf_dir, name)
-    if os.path.isdir(p):
-        return sum(pq.read_metadata(os.path.join(p, f)).num_rows
-                   for f in os.listdir(p) if f.endswith(".parquet"))
-    return pq.read_metadata(p).num_rows
+    return sum(pq.read_metadata(f).num_rows
+               for f in table_files(sf_dir, name))
 
 
-_READ_TABLE_CACHE: dict = {}
-_READ_TABLE_LOCK = __import__("threading").Lock()
+def table_stamp(sf_dir: str, name: str) -> tuple:
+    """(path, size, mtime_ns) of every parquet file of the table — the
+    version of the input that session-memoized frames are keyed on, so
+    a rewritten file supersedes them."""
+    stamp = []
+    for f in table_files(sf_dir, name):
+        st = os.stat(f)
+        stamp.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(stamp)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy scan of a harness table; filters/projections push down.
 
-    SHARED-INSTANCE CONTRACT (ADVICE r9): all callers of the same
-    (session, sf_dir, table) receive the SAME DataFrame object. A
-    self-join of two read_table results with attribute-based
-    conditions (a['k'] == b['k']) would trip Spark's ambiguous-
-    self-join detection; join same-table reads via select-aliases or
-    string column names (every current call site does), or call
+    SHARED-INSTANCE CONTRACT: all callers of the same (session,
+    sf_dir, table) receive the SAME DataFrame object. A self-join of
+    two read_table results with attribute-based conditions
+    (a['k'] == b['k']) would trip Spark's ambiguous-self-join
+    detection; join same-table reads via select-aliases or string
+    column names (every current call site does), or call
     _read_table_fresh for a distinct relation.
 
-    r9-opt (guide §6 — file listing / relation reuse): the resolved
-    DataFrame is memoized per (applicationId, sf_dir, table). Every
+    The resolved DataFrame is session-memoized per (sf_dir, table)
+    and versioned by the table's `table_stamp`. Every
     `spark.read.parquet` constructs a fresh relation — footer read for
     schema inference plus a fresh file index — all driver-side,
-    serialized, and identical per (session, path); across a 270-query
-    suite that re-resolution was ~0.3-0.7 s PER QUERY (measured: a
-    14-query warehouse batch dropped 24.8 → 18.7 s from this cache
-    alone). This is plan-level reuse only — the scan still reads
-    parquet on every execution (no data is cached); it is exactly the
-    resolve-once behaviour a catalog table gives at 100 TB. Entries
-    from stopped sessions are evicted by applicationId.
+    serialized, and identical per (session, path); across the suite
+    that re-resolution cost ~0.3-0.7 s PER QUERY. This is plan-level
+    reuse only — the scan still reads parquet on every execution (no
+    data is cached); it is the resolve-once behaviour a catalog table
+    gives at 100 TB. A rewritten file re-resolves, so no frame scans
+    through a stale file index.
 
     `events.ts` may be stored two ways depending on the writer:
       - TIMESTAMP(MICROS, NTZ) — Spark reads it natively as
@@ -76,23 +90,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Branch on the dtype Spark actually reads — never assume the
     physical encoding.
     """
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, name)
-    hit = _READ_TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # lock: _curation drives Spark from a thread pool (ADVICE r9) —
-    # without it concurrent misses do duplicate driver-side resolves
-    # and eviction can interleave with an insert
-    with _READ_TABLE_LOCK:
-        hit = _READ_TABLE_CACHE.get(key)
-        if hit is not None:
-            return hit
-        for stale in [k for k in _READ_TABLE_CACHE if k[0] != app]:
-            _READ_TABLE_CACHE.pop(stale, None)
-        df = _read_table_fresh(spark, sf_dir, name)
-        _READ_TABLE_CACHE[key] = df
-        return df
+    return session_memo(spark, ("read_table", sf_dir, name),
+                        lambda: _read_table_fresh(spark, sf_dir, name),
+                        stamp=table_stamp(sf_dir, name))
 
 
 def _read_table_fresh(spark: SparkSession, sf_dir: str,

@@ -6,7 +6,11 @@ order-insensitive value comparison (exact match after sorting columns
 by name and rows by value, plus a float-tolerance fallback so we can
 see whether a mismatch is cosmetic or real).
 
-Usage: python tools/check.py [sf_dir] [query ...]
+With --twice, each query also runs a second time in the same session
+and the two results must be identical (a determinism gate; with the
+session-memoized price tables the first run is cold, the second warm).
+
+Usage: python tools/check.py [--twice] [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -33,12 +37,26 @@ def norm_cell(v):
     return v
 
 
+def sort_key(v):
+    """Stringified cell for row sorting; `+ 0.0` maps -0.0 to 0.0 so
+    cells equal under == sort together (DuckDB's ROUND can return
+    -0.0 where Spark returns 0.0)."""
+    return str(v + 0.0) if isinstance(v, float) else str(v)
+
+
 def norm_rows(cols, rows):
     """Sort columns by name, then rows by stringified values."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     out = [tuple(norm_cell(r[i]) for i in order) for r in rows]
-    out.sort(key=lambda t: tuple(str(x) for x in t))
+    out.sort(key=lambda t: tuple(sort_key(x) for x in t))
     return [cols[i] for i in order], out
+
+
+def bits(cols, rows):
+    """Columns and rows in canonical order with every cell as its repr:
+    equal only when bit-identical, signed zeros included."""
+    cols, rows = norm_rows(cols, rows)
+    return cols, [tuple(map(repr, r)) for r in rows]
 
 
 def approx_equal(a, b, rel=1e-6, abs_tol=1e-9):
@@ -51,6 +69,8 @@ def approx_equal(a, b, rel=1e-6, abs_tol=1e-9):
 
 def main():
     args = sys.argv[1:]
+    twice = "--twice" in args
+    args = [a for a in args if a != "--twice"]
     sf_dir = SF_DIR_DEFAULT
     if args and "/" in args[0]:
         sf_dir, args = args[0], args[1:]
@@ -73,12 +93,19 @@ def main():
     oracles = E.oracle_sql()
     names = args or list(qs)
     n_pass = n_fail = 0
+
+    def run(name):
+        sdf = qs[name](spark, sf_dir)
+        return sdf.columns, [tuple(r) for r in sdf.collect()]
+
     for name in names:
         t0 = time.time()
         try:
-            sdf = qs[name](spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            scols, srows = run(name)
+            if twice and bits(*run(name)) != bits(scols, srows):
+                print(f"FAIL {name}: second run differs from the first")
+                n_fail += 1
+                continue
         except Exception as ex:
             print(f"FAIL {name}: spark error: {ex!r}"[:500])
             n_fail += 1

@@ -2,7 +2,7 @@
 registered query at the given sf and count the plan features that
 matter (joins, exchanges, pushdown, top-k, Python stages).
 
-Usage: python tools/plan_audit.py [sf_dir] > /tmp/plan_table.md
+Usage: python tools/plan_audit.py [sf_dir] [query ...] > plan_table.md
 """
 
 from __future__ import annotations
@@ -21,14 +21,16 @@ from etl_portfolio_tracker_spark.session import get_spark  # noqa: E402
 
 def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    qs = E.queries()
+    names = sys.argv[2:] or list(qs)
     spark = get_spark("plan_audit")
     print("| query | BHJ | SMJ | exchanges | pushed scans | top-k | py |")
     print("|---|---|---|---|---|---|---|")
-    for name, fn in E.queries().items():
+    for name in names:
         try:
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
-                fn(spark, sf).explain("formatted")
+                qs[name](spark, sf).explain("formatted")
             s = buf.getvalue()
             bhj = s.count("BroadcastHashJoin")
             smj = s.count("SortMergeJoin")

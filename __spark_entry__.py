@@ -30,7 +30,7 @@ from etl_portfolio_tracker_spark.oracle import (
     FOLD_FINALS_SQL, OVERSELL_SQL, PRICES_CTE, RAW_TRADES_CTE,
     STREAM_FOLD_SQL, TICK_PRICES_CTE, TRADES_CTE, UNIVERSE_CTE, with_domain,
 )
-from etl_portfolio_tracker_spark.memo import session_memo
+from etl_portfolio_tracker_spark.memo import session_drop, session_memo
 from etl_portfolio_tracker_spark.operators import asof as AS
 from etl_portfolio_tracker_spark.operators import bpe as BPE
 from etl_portfolio_tracker_spark.operators import calendar as C
@@ -966,9 +966,6 @@ def _docs(spark, sf_dir):
         stamp=table_stamp(sf_dir, "documents"))
 
 
-_CURATION_STATE: dict = {}
-
-
 def _curation(spark, sf_dir):
     """Pipeline-mode shared state for the curation composites: the
     near-dup clusters (LSH + connected components) and the
@@ -981,127 +978,108 @@ def _curation(spark, sf_dir):
     report. Results are bit-identical to the standalone forms
     (dedup.curation_pipeline; asserted in
     tests/test_curation_pipeline.py), so the oracle gate is
-    unaffected."""
-    # keyed on applicationId, not id(spark): a stopped session's
-    # object address can be recycled by a new session, which would
-    # serve persisted frames bound to a dead SparkContext. App ids
-    # are timestamped-unique per context. Entries from OTHER app ids
-    # belong to stopped sessions (one live context per process) and
-    # are evicted here, so state stays O(sf_dirs) for the live app.
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in (*_CURATION_STATE, *_EMB_PAIRS_STATE)
-                  if k[0] != app]:
-        _CURATION_STATE.pop(stale, None)
-        _EMB_PAIRS_STATE.pop(stale, None)
-    key = (app, sf_dir)
-    st = _CURATION_STATE.get(key)
-    if st is None:
-        # r9-opt (guide §2.6 — overlap independent jobs): the build
-        # DAG is band_keys → {index write, cands, clusters} →
-        # {verdict (needs clusters), verified (needs cands)}. The
-        # serial build left most of the cluster idle during each
-        # stage's tail; materializing the independent stages from a
-        # small thread pool backfills executors with the next stage's
-        # tasks (Spark schedules concurrent jobs FIFO — exactly the
-        # back-fill behaviour wanted). Frames and their contents are
-        # IDENTICAL to the serial build (same plans, same persists);
-        # only the materialization order overlaps. Measured sf0.1:
-        # ~17-24 s serial build → ~11-13 s.
-        from concurrent.futures import ThreadPoolExecutor
-        docs = _docs(spark, sf_dir)
-        band_keys = DD.minhash_band_keys(docs).persist()
-        band_keys.count()  # materialize once; every stage reads it
-        # persist the band-key index to disk as part of the one-time
-        # build (delta_dedup's step 3): curation_serve — the
-        # production steady-state — reads THIS artifact instead of
-        # recomputing the sha256 signature stage. Repo-anchored path
-        # (a CWD-relative one breaks when the embedding process runs
-        # elsewhere); deterministic per sf tag → overwritten per
-        # build, never an unbounded leak.
-        tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-        idx_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "spark-warehouse", f"_bandkey_index_{tag}")
-        cands = DD.minhash_lsh_candidates(
-            docs, band_keys=band_keys).persist()
-        # r10 (guide §2.6, VERDICT r9 item 5): corpus_prune's exact-dup
-        # and quality stages do not depend on clusters — persist and
-        # count them IN THE POOL so they materialize while the CC loop
-        # (the build's serialized critical path) runs; corpus_prune
-        # then consumes the materialized frames instead of re-deriving
-        # both stages after clusters finish. Frame contents identical.
-        exact = DD.prune_exact_stage(docs).persist()
-        qual = DD.prune_quality_stage(docs).persist()
-        fs: list = []
-        try:
-            with ThreadPoolExecutor(max_workers=6) as pool:
-                fs.append(pool.submit(
-                    lambda: band_keys.write.mode("overwrite")
-                                     .parquet(idx_path)))
-                fs.append(pool.submit(cands.count))
-                # dedup_clusters' construct is itself a driver-
-                # coordinated CC loop (eager per-round jobs) — run it
-                # in the pool so its rounds overlap the candidate-pair
-                # aggregation.
-                f_clusters = pool.submit(
-                    lambda: DD.dedup_clusters(
-                        docs, band_keys=band_keys).persist())
-                fs.append(f_clusters)
-                # verified depends only on cands — construct and
-                # materialize it WHILE the clusters CC loop still runs
-                # (the construct itself runs the kernel's eager
-                # checkpoint jobs, so it belongs in the pool too)
-                f_vframe = pool.submit(
-                    lambda: DD.minhash_verified(docs, cands=cands).persist())
-                fs.append(f_vframe)
-                fs.append(pool.submit(exact.count))
-                fs.append(pool.submit(qual.count))
-                clusters = f_clusters.result()
-                fs.append(pool.submit(clusters.count))
-                verdict = DD.corpus_prune(docs, clusters=clusters,
-                                          exact=exact, qual=qual).persist()
-                fs.append(pool.submit(verdict.count))
-                verified = f_vframe.result()
-                fs.append(pool.submit(verified.count))
-                for f in fs:
-                    f.result()  # propagate any build failure loudly
-            # verdict is persisted; the stage frames it read are no
-            # longer needed as separate storage
-            exact.unpersist()
-            qual.unpersist()
-        except BaseException:
-            # ADVICE r9: drain stragglers so a root-cause exception is
-            # not masked by a later future's error, and drop persisted
-            # intermediates so a failed build does not leak storage
-            from concurrent.futures import wait as _fwait
-            _fwait(fs)
-            for frame in (band_keys, cands, exact, qual):
-                try:
-                    frame.unpersist()
-                except Exception:  # pragma: no cover - best effort
-                    pass
-            raise
-        st = {"band_keys": band_keys, "cands": cands,
-              "clusters": clusters, "verdict": verdict,
-              "verified": verified, "index_path": idx_path}
-        _CURATION_STATE[key] = st
-    return st
+    unaffected. Memoized per session and documents version
+    (`memo.session_memo`); `_curation_reset` drops it."""
+    return session_memo(spark, ("curation", sf_dir),
+                        lambda: _curation_build(spark, sf_dir),
+                        stamp=table_stamp(sf_dir, "documents"))
+
+
+def _curation_build(spark, sf_dir):
+    """The shared curation frames, persisted and materialized.
+
+    The build DAG is band_keys → {index write, cands, clusters} →
+    {verdict (needs clusters), verified (needs cands)}. A serial build
+    leaves most of the cluster idle during each stage's tail;
+    materializing the independent stages from a small thread pool
+    backfills executors with the next stage's tasks (the build runs
+    under FAIR scheduling). Frames and their contents are IDENTICAL to
+    a serial build (same plans, same persists); only the
+    materialization order overlaps."""
+    from concurrent.futures import ThreadPoolExecutor
+    docs = _docs(spark, sf_dir)
+    band_keys = DD.minhash_band_keys(docs).persist()
+    band_keys.count()  # materialize once; every stage reads it
+    # persist the band-key index to disk as part of the one-time
+    # build (delta_dedup's step 3): curation_serve — the
+    # production steady-state — reads THIS artifact instead of
+    # recomputing the sha256 signature stage. Repo-anchored path
+    # (a CWD-relative one breaks when the embedding process runs
+    # elsewhere); deterministic per sf tag → overwritten per
+    # build, never an unbounded leak.
+    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
+    idx_path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)),
+        "spark-warehouse", f"_bandkey_index_{tag}")
+    cands = DD.minhash_lsh_candidates(
+        docs, band_keys=band_keys).persist()
+    # corpus_prune's exact-dup and quality stages do not depend on
+    # clusters — persist and count them IN THE POOL so they
+    # materialize while the CC loop (the build's serialized critical
+    # path) runs; corpus_prune then consumes the materialized frames
+    # instead of re-deriving both stages after clusters finish.
+    exact = DD.prune_exact_stage(docs).persist()
+    qual = DD.prune_quality_stage(docs).persist()
+    fs: list = []
+    try:
+        with ThreadPoolExecutor(max_workers=6) as pool:
+            fs.append(pool.submit(
+                lambda: band_keys.write.mode("overwrite")
+                                 .parquet(idx_path)))
+            fs.append(pool.submit(cands.count))
+            # dedup_clusters' construct is itself a driver-
+            # coordinated CC loop (eager per-round jobs) — run it
+            # in the pool so its rounds overlap the candidate-pair
+            # aggregation.
+            f_clusters = pool.submit(
+                lambda: DD.dedup_clusters(
+                    docs, band_keys=band_keys).persist())
+            fs.append(f_clusters)
+            # verified depends only on cands — construct and
+            # materialize it WHILE the clusters CC loop still runs
+            # (the construct itself runs the kernel's eager
+            # checkpoint jobs, so it belongs in the pool too)
+            f_vframe = pool.submit(
+                lambda: DD.minhash_verified(docs, cands=cands).persist())
+            fs.append(f_vframe)
+            fs.append(pool.submit(exact.count))
+            fs.append(pool.submit(qual.count))
+            clusters = f_clusters.result()
+            fs.append(pool.submit(clusters.count))
+            verdict = DD.corpus_prune(docs, clusters=clusters,
+                                      exact=exact, qual=qual).persist()
+            fs.append(pool.submit(verdict.count))
+            verified = f_vframe.result()
+            fs.append(pool.submit(verified.count))
+            for f in fs:
+                f.result()  # propagate any build failure loudly
+        # verdict is persisted; the stage frames it read are no
+        # longer needed as separate storage
+        exact.unpersist()
+        qual.unpersist()
+    except BaseException:
+        # drain stragglers so a root-cause exception is not masked by
+        # a later future's error, and drop persisted intermediates so
+        # a failed build does not leak storage
+        from concurrent.futures import wait as _fwait
+        _fwait(fs)
+        for frame in (band_keys, cands, exact, qual):
+            try:
+                frame.unpersist()
+            except Exception:  # pragma: no cover - best effort
+                pass
+        raise
+    return {"band_keys": band_keys, "cands": cands,
+            "clusters": clusters, "verdict": verdict,
+            "verified": verified, "index_path": idx_path}
 
 
 def _curation_reset(spark):
     """Drop this session's shared curation state and unpersist its
-    frames, so bench.py's _curation_build best-of-2 retry (r10,
-    VERDICT r9 item 3) re-measures the whole build from parquet —
-    nothing from the first sample is reused."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _CURATION_STATE if k[0] == app]:
-        st = _CURATION_STATE.pop(k)
-        for v in st.values():
-            if hasattr(v, "unpersist"):
-                try:
-                    v.unpersist()
-                except Exception:  # pragma: no cover - defensive
-                    pass
+    frames, so the next `_curation` call rebuilds the whole state
+    from parquet — nothing from an earlier build is reused (bench.py's
+    best-of-2 build retry and perfbench's curation workload)."""
+    session_drop(spark, lambda k: k[0] == "curation")
 
 
 def _emb(spark, sf_dir):
@@ -1362,25 +1340,15 @@ def _q_lsh_buckets(spark, sf_dir):
     return SIM.lsh_buckets(_emb(spark, sf_dir))
 
 
-_EMB_PAIRS_STATE: dict = {}
-
-
 def _emb_pairs(spark, sf_dir):
     """Shared banded-LSH embedding candidate pairs (pipeline mode,
     same rule as _curation): computed and persisted once per
     (session, sf_dir), consumed by embedding_near_dup and
     embedding_near_dup_verified."""
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in (*_CURATION_STATE, *_EMB_PAIRS_STATE)
-                  if k[0] != app]:
-        _CURATION_STATE.pop(stale, None)
-        _EMB_PAIRS_STATE.pop(stale, None)
-    key = (app, sf_dir)
-    p = _EMB_PAIRS_STATE.get(key)
-    if p is None:
-        p = SIM.embedding_near_dup_pairs(_emb(spark, sf_dir)).persist()
-        _EMB_PAIRS_STATE[key] = p
-    return p
+    return session_memo(
+        spark, ("emb_pairs", sf_dir),
+        lambda: SIM.embedding_near_dup_pairs(_emb(spark, sf_dir)).persist(),
+        stamp=table_stamp(sf_dir, "embeddings"))
 
 
 def _q_embedding_near_dup(spark, sf_dir):

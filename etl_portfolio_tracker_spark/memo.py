@@ -12,10 +12,21 @@ import threading
 from pyspark.sql import SparkSession
 
 _MEMO: dict = {}
-# reentrant: a build may itself call session_memo (the docs spread
-# reads the memoized documents scan); the curation build calls in
-# from a thread pool, so concurrent misses must not build twice
-_MEMO_LOCK = threading.RLock()
+# guards the two tables; held for table updates only, never across a
+# build, so a build may call back into session_memo from pool threads
+# (the curation build reads the memoized documents scan)
+_MEMO_LOCK = threading.Lock()
+# one lock per (application, key), held across that key's build:
+# concurrent misses on one key build it once, other keys proceed.
+# Reentrant, so a build may itself call session_memo
+_KEY_LOCKS: dict = {}
+
+
+def _release(value) -> None:
+    """Unpersist a persisted frame, or each one among a dict's values."""
+    for v in value.values() if isinstance(value, dict) else (value,):
+        if getattr(v, "is_cached", False):
+            v.unpersist()
 
 
 def session_memo(spark: SparkSession, key, build, stamp=None):
@@ -29,7 +40,7 @@ def session_memo(spark: SparkSession, key, build, stamp=None):
 
     `stamp` versions the entry (e.g. the source files' sizes and
     mtimes). A call with a different stamp supersedes the entry: the
-    old value is unpersisted if it was persisted, then rebuilt.
+    old value's persisted frames are unpersisted, then it is rebuilt.
     """
     app = spark.sparkContext.applicationId
     hit = _MEMO.get((app, key))
@@ -38,12 +49,29 @@ def session_memo(spark: SparkSession, key, build, stamp=None):
     with _MEMO_LOCK:
         for k in [k for k in _MEMO if k[0] != app]:
             del _MEMO[k]
+        for k in [k for k in _KEY_LOCKS if k[0] != app]:
+            del _KEY_LOCKS[k]
+        lock = _KEY_LOCKS.setdefault((app, key), threading.RLock())
+    with lock:
         hit = _MEMO.get((app, key))
         if hit is not None and hit[0] == stamp:
             return hit[1]
-        if hit is not None and getattr(hit[1], "is_cached", False):
-            hit[1].unpersist()
-        _MEMO.pop((app, key), None)  # a failed build leaves no entry
+        with _MEMO_LOCK:
+            _MEMO.pop((app, key), None)  # a failed build leaves no entry
+        if hit is not None:
+            _release(hit[1])
         value = build()
-        _MEMO[(app, key)] = (stamp, value)
+        with _MEMO_LOCK:
+            _MEMO[(app, key)] = (stamp, value)
         return value
+
+
+def session_drop(spark: SparkSession, match) -> None:
+    """Drop this application's entries whose key satisfies `match` and
+    unpersist their persisted frames."""
+    app = spark.sparkContext.applicationId
+    with _MEMO_LOCK:
+        gone = [_MEMO.pop(k)[1] for k in list(_MEMO)
+                if k[0] == app and match(k[1])]
+    for value in gone:
+        _release(value)

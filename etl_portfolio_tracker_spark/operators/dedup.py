@@ -818,75 +818,86 @@ def tfidf_cosine_verified(docs: DataFrame,
 
 
 def min_label_components(labels: DataFrame, edges: DataFrame,
-                         max_iter: int = 25) -> DataFrame:
+                         max_iter: int = 50) -> DataFrame:
     """Connected components by iterative min-label propagation.
 
-    `labels` is (doc_id, cluster_id) initialized to cluster_id=doc_id;
-    `edges` is a SYMMETRIC (doc_a, doc_b) edge list. Each round every
-    node takes the min of its own label and its neighbors' labels —
-    Bellman-Ford-style, converging in ≤ graph-diameter rounds to
-    cluster_id = min(doc_id in component).
+    `labels` is (doc_id, cluster_id) with unique doc_ids, initialized
+    to cluster_id=doc_id; `edges` is a SYMMETRIC (doc_a, doc_b) edge
+    list. Edges with an endpoint that is not a label row are ignored.
+    Each round every node takes the min of its own label and its
+    neighbors' labels — Bellman-Ford-style, converging in
+    graph-diameter + 1 rounds to cluster_id = min(doc_id in component).
 
-    Scale shape: each round is one shuffle join (edges ⋈ labels on the
-    node key) + one min-agg + one label update; labels are
-    checkpointed each round so lineage stays O(1) (`iter_checkpoint`:
-    reliable `checkpoint()` to the session's checkpoint dir when one
-    is configured — the cluster-durable, lost-executor-safe path —
-    else `localCheckpoint()`; same plan either way).
-    Convergence is detected with a
-    1-row decimal-sum fingerprint: labels only ever decrease, so the
-    sum is strictly monotone until the fixpoint. Near-dup graphs have
-    tiny diameters (dup groups are quasi-cliques: LSH links most pairs
-    directly), so rounds ≈ 3-4 in practice, never O(n).
+    Round shape — one step per round, about 3 Spark jobs under AQE:
+    - The closed neighbourhood is built and persisted once: the edges
+      whose doc_a is a label row (a semi-join) plus one self-loop
+      (doc_id, doc_id) per label row. A step is then one join and one
+      aggregate, `nbrs ⋈ labels on doc_b → min(cluster_id) per doc_a`:
+      the self-loop brings each node's own label into the min, so the
+      step computes least(own, min neighbour) with no left join back
+      onto the labels (whose exchange and broadcast are jobs of their
+      own under AQE).
+    - The step's output is checkpointed each round so lineage stays
+      O(1) (`iter_checkpoint`: reliable `checkpoint()` to the session's
+      checkpoint dir when one is configured — the cluster-durable,
+      lost-executor-safe path — else `localCheckpoint()`; same plan
+      either way).
+    - Convergence is a 1-row decimal-sum fingerprint of the labels.
+      Labels only ever decrease, so the sum is strictly monotone until
+      the fixpoint. It is attached to the checkpointed frame with
+      `observe` and read once the eager checkpoint has run, so it
+      costs no aggregate-and-collect job of its own. Each call makes
+      fresh (uniquely named) Observations, so concurrent calls from a
+      thread pool do not share metrics.
+
+    One step per round, not more: every round is a cluster barrier,
+    yet unrolling two steps into a round, or adding pointer jumping,
+    launched as many jobs or more in total, because each extra step
+    costs the same joins and near-dup graphs have tiny diameters (dup
+    groups are quasi-cliques: LSH links most pairs directly).
+
+    `max_iter` is the round budget; a graph that has not converged
+    within it raises instead of returning unconverged (wrong) labels.
 
     This is the driver-coordinated-iteration pattern (GraphX Pregel
     supersteps); for planet-scale graphs swap the per-round kernel for
     large-star/small-star (Kiveris et al., "Connected Components in
     MapReduce and Beyond") — same outer loop.
     """
+    from pyspark.sql import Observation
     from ..derive import DEC
 
-    def _step(lbl: DataFrame) -> DataFrame:
-        nbr_min = (edges
-                   .join(lbl.select(F.col("doc_id").alias("doc_b"),
-                                    F.col("cluster_id").alias("nbr_label")),
-                         "doc_b")
-                   .groupBy("doc_a")
-                   .agg(F.min("nbr_label").alias("nbr_min")))
-        return (lbl
-                .join(nbr_min.select(F.col("doc_a").alias("doc_id"),
-                                     "nbr_min"),
-                      "doc_id", "left")
-                .select("doc_id",
-                        F.least(F.col("cluster_id"),
-                                F.coalesce(F.col("nbr_min"),
-                                           F.col("cluster_id")))
-                         .alias("cluster_id")))
-
-    edges = edges.persist()
     labels = iter_checkpoint(labels, eager=True)
-    prev_fp = None
-    # r9-opt (guide §2.4/§2.6 — fewer driver-coordinated rounds): each
-    # materialized round applies the propagation TWICE. Min-label
-    # propagation is idempotent at the fixpoint, so the converged
-    # labels are identical; the fixpoint is just reached in
-    # ceil(diameter/2)+1 materializations instead of diameter+1 —
-    # half the eager-checkpoint + fingerprint-collect job pairs, which
-    # dominate wall at any scale (each round is a full cluster
-    # barrier). Measured sf0.1 curation CC: 4.1 s → 3.4 s warm at
-    # bit-identical output; a 3-step unroll regressed (8+ s: the
-    # per-round plan crosses a planning/codegen threshold), so 2 is
-    # the measured optimum. A LAZY per-round checkpoint (fp collect
-    # materializing it) was also tried and regressed 3x — localCheckpoint
-    # blocks are only reliably reused when materialized eagerly.
-    for _ in range(max_iter):
-        labels = iter_checkpoint(_step(_step(labels)), eager=True)
-        fp = labels.agg(F.sum(F.col("cluster_id").cast(DEC))).collect()[0][0]
-        if fp == prev_fp:
-            break
-        prev_fp = fp
-    edges.unpersist()
-    return labels
+    ids = labels.select("doc_id")
+    nbrs = (edges.select("doc_a", "doc_b")
+            .join(ids.select(F.col("doc_id").alias("doc_a")), "doc_a",
+                  "left_semi")
+            .unionByName(ids.select(F.col("doc_id").alias("doc_a"),
+                                    F.col("doc_id").alias("doc_b")))
+            .persist())
+    try:
+        prev_fp = None
+        for _ in range(max_iter):
+            obs = Observation()
+            step = (nbrs
+                    .join(labels.select(F.col("doc_id").alias("doc_b"),
+                                        "cluster_id"), "doc_b")
+                    .groupBy(F.col("doc_a").alias("doc_id"))
+                    .agg(F.min("cluster_id").alias("cluster_id")))
+            labels = iter_checkpoint(
+                step.observe(
+                    obs, F.sum(F.col("cluster_id").cast(DEC)).alias("fp")),
+                eager=True)
+            fp = obs.get["fp"]
+            if fp == prev_fp:
+                return labels
+            prev_fp = fp
+    finally:
+        nbrs.unpersist()
+    raise RuntimeError(
+        "min_label_components: labels did not converge within "
+        f"max_iter={max_iter} rounds (one propagation step per round); "
+        "the graph's diameter exceeds the round budget")
 
 
 def dedup_clusters(docs: DataFrame,

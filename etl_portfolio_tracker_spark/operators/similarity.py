@@ -1089,11 +1089,13 @@ def semantic_clusters(emb: DataFrame, n_cells: int | None = None,
 
     Scale shape: pair generation is the cell-bounded scan (≈N^1.5
     under the √N cell rule); components use the shared min-label
-    propagation kernel (dedup.min_label_components — per-round
-    shuffle join + min-agg, checkpointed lineage, O(1) driver state).
-    Within-cell edges make components cell-local UNLESS τ-pairs chain
-    across cells — which they can't here (pairs are intra-cell by
-    construction), so diameter is tiny and rounds ≈ 2-3.
+    propagation kernel (dedup.min_label_components — one propagation
+    step per round: the persisted closed neighbourhood joined with the
+    labels and min-aggregated per vector, the result checkpointed with
+    its convergence fingerprint observed on the checkpoint job; O(1)
+    lineage and driver state). Components are cell-local, since pairs
+    are intra-cell by construction, so the diameter is tiny and the
+    loop runs diameter + 1 rounds, a handful in practice.
 
     Oracle: recursive-CTE transitive closure over the same pair
     predicate — the dedup_clusters twin on the embedding side.

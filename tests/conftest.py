@@ -20,3 +20,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def cc_graph(spark):
+    """graph(pairs, n) -> (labels0, edges): the min_label_components
+    inputs for nodes 0..n-1 labelled by themselves and the symmetric
+    closure of `pairs`."""
+    from pyspark.sql import functions as F
+
+    def graph(pairs, n):
+        edges = spark.createDataFrame(pairs + [(b, a) for a, b in pairs],
+                                      "doc_a long, doc_b long")
+        labels0 = spark.range(n).select(F.col("id").alias("doc_id"),
+                                        F.col("id").alias("cluster_id"))
+        return labels0, edges
+
+    return graph

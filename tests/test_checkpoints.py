@@ -68,3 +68,30 @@ def test_clusters_identical_under_durable_checkpoint(spark, sf_dir,
     getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
     local = _rows(DD.dedup_clusters(docs))
     assert durable == local
+
+
+def _persisted(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_dedup_clusters_leaves_no_persisted_storage(spark, sf_dir,
+                                                    checkpoint_dir):
+    # the kernel's persisted neighbour frame is released on return
+    docs = read_table(spark, sf_dir, "documents")
+    before = _persisted(spark)
+    DD.dedup_clusters(docs).count()
+    assert not _persisted(spark) - before
+
+
+def test_failing_edges_raise_root_cause_and_leak_nothing(
+        spark, cc_graph, checkpoint_dir):
+    # an edges frame that fails while the loop materializes it: the
+    # caller sees the root cause, and the neighbour frame is released
+    from pyspark.sql import functions as F
+    labels0, edges = cc_graph([(i, i + 1) for i in range(9)], 10)
+    bad = edges.filter(F.assert_true(F.col("doc_a") < 5,
+                                     F.lit("cc-root-cause")).isNull())
+    before = _persisted(spark)
+    with pytest.raises(Exception, match="cc-root-cause"):
+        DD.min_label_components(labels0, bad)
+    assert not _persisted(spark) - before

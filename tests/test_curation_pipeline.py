@@ -58,3 +58,16 @@ def test_pipeline_outputs_match_standalone(docs):
     }
     for name, solo in standalone.items():
         assert _rows(out[name]) == _rows(solo), f"{name} diverges"
+
+
+def test_registry_state_memoized_and_reset(spark, sf_dir):
+    # the registry's shared state is built once per session; the reset
+    # drops it and unpersists every frame it held
+    import __spark_entry__ as E
+    st = E._curation(spark, sf_dir)
+    assert E._curation(spark, sf_dir) is st
+    frames = [v for v in st.values() if hasattr(v, "unpersist")]
+    assert len(frames) == 5 and all(f.is_cached for f in frames)
+    E._curation_reset(spark)
+    assert not any(f.is_cached for f in frames)
+    assert E._curation(spark, sf_dir) is not st

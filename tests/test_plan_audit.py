@@ -677,11 +677,7 @@ def private_sf(spark, tmp_path):
         return sf
 
     yield copy
-    with memo._MEMO_LOCK:
-        for k in [k for k in memo._MEMO if sf in k[1]]:
-            value = memo._MEMO.pop(k)[1]
-            if getattr(value, "is_cached", False):
-                value.unpersist()
+    memo.session_drop(spark, lambda k: sf in k[1])
 
 
 def test_portfolio_twr_single_user_exchange(spark):
@@ -777,3 +773,80 @@ def test_tick_prices_memo_superseded_by_rewrite(spark, private_sf):
     new_rows = {(r.ticker, r.ts): r.close for r in new.collect()}
     assert new_rows == {k: v + 1000.0 for k, v in old_rows.items()}
 
+
+# --- connected components: one join per round ---------------------------------
+
+# warm-band-key jobs of dedup_clusters at sf0.001: the star-edge and
+# label checkpoints plus about 3 jobs per propagation round
+DEDUP_CLUSTERS_JOB_CAP = 36
+
+
+def _outside_cache(plan: str) -> str:
+    """The final adaptive plan minus the subtrees under each
+    InMemoryRelation (a cached frame's own build plan)."""
+    final = plan.split("\n+- == Initial Plan ==")[0]
+    out, cached_at = [], None
+    for ln in final.splitlines():
+        col = len(ln) - len(ln.lstrip(" :+-"))
+        if cached_at is not None and col > cached_at:
+            continue
+        cached_at = col if "InMemoryRelation" in ln else None
+        out.append(ln)
+    return "\n".join(out)
+
+
+def test_dedup_clusters_job_count(spark):
+    from etl_portfolio_tracker_spark.io import read_table
+    from etl_portfolio_tracker_spark.operators import dedup as DD
+    docs = read_table(spark, SF, "documents")
+    bk = DD.minhash_band_keys(docs).persist()
+    try:
+        bk.count()
+        jobs = _jobs_during(spark,
+                            lambda: DD.dedup_clusters(docs, band_keys=bk))
+    finally:
+        bk.unpersist()
+    assert jobs <= DEDUP_CLUSTERS_JOB_CAP
+
+
+def test_cc_round_is_one_join_one_aggregate(cc_graph, monkeypatch):
+    # a round is nbrs ⋈ labels → min per doc: one join, no left join
+    # back onto the labels, one (final) aggregate
+    import re
+    from etl_portfolio_tracker_spark.operators import dedup as DD
+    checkpointed = []
+    real = DD.iter_checkpoint
+
+    def record(df, eager=True):
+        checkpointed.append(df)
+        return real(df, eager=eager)
+
+    monkeypatch.setattr(DD, "iter_checkpoint", record)
+    labels0, edges = cc_graph([(0, 1), (1, 2), (3, 4)], 6)
+    DD.min_label_components(labels0, edges).collect()
+    # [0] is the initial labels; [1] the first round
+    plan = _outside_cache(physical_plan(checkpointed[1]))
+    assert len(re.findall(r"\w+Join\b", plan)) == 1
+    assert "LeftOuter" not in plan
+    finals = [ln for ln in plan.splitlines()
+              if "HashAggregate" in ln and "partial_" not in ln]
+    assert len(finals) == 1
+
+
+def test_cc_concurrent_calls_match_serial(cc_graph):
+    # the curation build runs CC from a thread pool: concurrent calls
+    # must not share convergence metrics or storage
+    from concurrent.futures import ThreadPoolExecutor
+    from etl_portfolio_tracker_spark.operators import dedup as DD
+    graphs = [cc_graph([(i, i + 1) for i in range(7)], 9),
+              cc_graph([(0, 5), (5, 9), (2, 3), (7, 8)], 10)]
+
+    def labels(g):
+        return sorted(tuple(r) for r in
+                      DD.min_label_components(*g).collect())
+
+    serial = [labels(g) for g in graphs]
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        concurrent = list(pool.map(labels, graphs))
+    assert concurrent == serial
+    assert serial[0] == [(i, 0) for i in range(8)] + [(8, 8)]

@@ -69,3 +69,33 @@ def test_entries_of_other_apps_are_dropped():
     S.session_memo(_app("memo-old"), "k", object)
     S.session_memo(_app("memo-new"), "k", object)
     assert not [k for k in S._MEMO if k[0] == "memo-old"]
+
+
+def test_build_may_call_back_from_pool_threads():
+    # the curation build reads other memo entries from its thread
+    # pool: a build must not hold a lock those threads need
+    from concurrent.futures import ThreadPoolExecutor
+    spark = _app("memo-pool")
+    pool = ThreadPoolExecutor(max_workers=2)
+
+    def build():
+        f = pool.submit(S.session_memo, spark, "inner", lambda: "in")
+        return ("out", f.result(timeout=10))
+
+    try:
+        assert S.session_memo(spark, "outer", build) == ("out", "in")
+    finally:
+        pool.shutdown(wait=False)
+
+
+def test_drop_unpersists_matching_entries():
+    spark = _app("memo-drop")
+    state = S.session_memo(spark, ("curation", "a"),
+                           lambda: {"f": _Frame(), "path": "p"})
+    kept = S.session_memo(spark, ("docs", "a"), _Frame)
+    S.session_drop(spark, lambda k: k[0] == "curation")
+    assert not state["f"].is_cached and kept.is_cached
+    assert S.session_memo(spark, ("docs", "a"), _Frame) is kept
+    fresh = S.session_memo(spark, ("curation", "a"),
+                           lambda: {"f": _Frame()})
+    assert fresh is not state

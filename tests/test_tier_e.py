@@ -1,6 +1,8 @@
 """Tier-E tests: dedup, similarity, text analysis, multimodal plumbing
 on tiny in-memory frames."""
 
+import pytest
+
 from etl_portfolio_tracker_spark import schemas
 from etl_portfolio_tracker_spark.operators import dedup as DD
 from etl_portfolio_tracker_spark.operators import multimodal as MM
@@ -207,6 +209,23 @@ def test_min_label_components_transitive(spark):
     out = {r["doc_id"]: r["cluster_id"]
            for r in DD.min_label_components(labels0, edges).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
+
+
+def test_min_label_components_long_path_exact(cc_graph):
+    # diameter 44: one step per round needs 44 rounds to carry label 0
+    # to the far end plus one to see the fixpoint, inside the budget
+    labels0, edges = cc_graph([(i, i + 1) for i in range(44)], 45)
+    out = {r["doc_id"]: r["cluster_id"]
+           for r in DD.min_label_components(labels0, edges).collect()}
+    assert out == {i: 0 for i in range(45)}
+
+
+def test_min_label_components_raises_past_round_budget(cc_graph):
+    # unconverged labels are wrong clusters: running out of rounds
+    # must fail loudly, naming the budget
+    labels0, edges = cc_graph([(i, i + 1) for i in range(44)], 45)
+    with pytest.raises(RuntimeError, match="max_iter=3 rounds"):
+        DD.min_label_components(labels0, edges, max_iter=3)
 
 
 def test_dedup_clusters_exact_dups_collapse(spark):

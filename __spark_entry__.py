@@ -1020,6 +1020,14 @@ def _curation_build(spark, sf_dir):
     # instead of re-deriving both stages after clusters finish.
     exact = DD.prune_exact_stage(docs).persist()
     qual = DD.prune_quality_stage(docs).persist()
+    # every frame persisted so far, for the failure path (list.append
+    # is atomic, so pool threads may add to it)
+    persisted = [band_keys, cands, exact, qual]
+
+    def kept(frame):
+        persisted.append(frame)
+        return frame
+
     fs: list = []
     try:
         with ThreadPoolExecutor(max_workers=6) as pool:
@@ -1032,22 +1040,23 @@ def _curation_build(spark, sf_dir):
             # in the pool so its rounds overlap the candidate-pair
             # aggregation.
             f_clusters = pool.submit(
-                lambda: DD.dedup_clusters(
-                    docs, band_keys=band_keys).persist())
+                lambda: kept(DD.dedup_clusters(
+                    docs, band_keys=band_keys).persist()))
             fs.append(f_clusters)
             # verified depends only on cands — construct and
             # materialize it WHILE the clusters CC loop still runs
             # (the construct itself runs the kernel's eager
             # checkpoint jobs, so it belongs in the pool too)
             f_vframe = pool.submit(
-                lambda: DD.minhash_verified(docs, cands=cands).persist())
+                lambda: kept(DD.minhash_verified(
+                    docs, cands=cands).persist()))
             fs.append(f_vframe)
             fs.append(pool.submit(exact.count))
             fs.append(pool.submit(qual.count))
             clusters = f_clusters.result()
             fs.append(pool.submit(clusters.count))
-            verdict = DD.corpus_prune(docs, clusters=clusters,
-                                      exact=exact, qual=qual).persist()
+            verdict = kept(DD.corpus_prune(docs, clusters=clusters,
+                                           exact=exact, qual=qual).persist())
             fs.append(pool.submit(verdict.count))
             verified = f_vframe.result()
             fs.append(pool.submit(verified.count))
@@ -1059,11 +1068,11 @@ def _curation_build(spark, sf_dir):
         qual.unpersist()
     except BaseException:
         # drain stragglers so a root-cause exception is not masked by
-        # a later future's error, and drop persisted intermediates so
-        # a failed build does not leak storage
+        # a later future's error, and drop persisted frames so a
+        # failed build does not leak storage
         from concurrent.futures import wait as _fwait
         _fwait(fs)
-        for frame in (band_keys, cands, exact, qual):
+        for frame in persisted:
             try:
                 frame.unpersist()
             except Exception:  # pragma: no cover - best effort

@@ -16,32 +16,41 @@ Float-determinism rules (apply to every query in this engine):
   * emitted decimals are rounded and cast back to DOUBLE so the output
     schema is stable.
 
-Session-memoized price tables. The reference stores `prices` as a
-table that every Dashboard query reads (src/etl.py:24-65); here
-`prices(spark, sf_dir)` (without `max_partkey`) and `tick_prices`
-each return ONE persisted frame per session and input version,
-through `memo.session_memo`:
-  * key: (sf_dir, source table) within the session's applicationId;
+Session-memoized derived tables. The reference stores `prices` and
+`trades` as tables that every Dashboard query reads (src/etl.py:24-65,
+app/services/portfolio.py, trades.py); here `prices(spark, sf_dir)`
+(without `max_partkey`), `tick_prices` and `trades` each return ONE
+persisted frame per session and input version, through
+`memo.session_memo`:
+  * key: (sf_dir, derived table name) within the session's
+    applicationId;
   * version: the size and mtime of every source parquet file
     (`io.table_stamp`, read with os.stat on each call) — a rewritten
     input supersedes the entry, which unpersists the old frame
     before the new one is built;
-  * layout: the (ticker, ts) min-aggregate (map-side combine kept)
-    in ONE partition;
+  * layout: ONE partition — the (ticker, ts) min-aggregates with
+    their map-side combine kept, the trade ledger as its per-row
+    projection of `events`;
   * lazy: `.persist()` runs no job; the first query that reads the
     frame builds the cache, later ones scan it.
-Why one partition: every consumer windows or aggregates per ticker.
-Spark keeps a cached plan's output partitioning (with
+Why one partition: every price consumer windows or aggregates per
+ticker, every ledger consumer groups, windows or sorts per user, per
+(user, ticker) or globally. Spark keeps a cached plan's output
+partitioning (with
 spark.sql.optimizer.canChangeCachedPlanOutputPartitioning at its
-default, false), and a single partition satisfies any per-ticker
-clustering, so those windows and aggregates plan no shuffle and a
-warm consumer runs as one job. The layout is measured, not sized by
-a rule: `tick_prices` is 150 rows over 5 tickers at every sf, and
-the four `prices` consumers ran as fast from one partition as from
-hash(ticker) into 4 at sf0.1 (596k rows; 4-core host, local[4]). A
-hash(ticker, n) layout waits for a workload whose table needs it
-(ROADMAP item 2). `prices(..., max_partkey=k)` is not
-memoized: its bound must reach the parquet scan.
+default, false), and a single partition satisfies any clustering or
+ordering, so those operators plan no shuffle over the cached scan and
+a warm consumer runs as one job. The two ledger folds see the same
+layout and skip their repartition (`fold.cluster_by_key`). The layout
+is measured, not sized by a rule: `tick_prices` is 150 rows over 5
+tickers at every sf, the four `prices` consumers ran as fast from one
+partition as from hash(ticker) into 4 at sf0.1 (596k rows; 4-core
+host, local[4]), and the ledger is 100k rows at sf0.1 (its consumers'
+timings are in CHANGES.md). A hash layout waits for a workload whose
+table needs it (ROADMAP item 2). Not memoized: `prices(...,
+max_partkey=k)`, whose bound must reach the parquet scan;
+`trades_projection`, which also maps streaming frames; and
+`raw_trades`, which one query reads.
 """
 
 from __future__ import annotations
@@ -60,18 +69,19 @@ def dsum(col):
     return F.sum(col.cast(DEC))
 
 
-def _session_prices(spark: SparkSession, sf_dir: str, table: str,
-                    derivation) -> DataFrame:
+def _session_table(spark: SparkSession, sf_dir: str, name: str,
+                   table: str, derivation) -> DataFrame:
     """The session's persisted, single-partition `derivation` of
-    `table` (module docstring: "Session-memoized price tables")."""
+    `table`, memoized as `name` (module docstring: "Session-memoized
+    derived tables")."""
     def build():
-        # hash(ticker) into one partition is a gather, which Spark plans
-        # as a SinglePartition shuffle; coalesce(1) gives the same layout
-        # without writing the table to a second shuffle
+        # repartitioning into one partition is a gather, which Spark
+        # plans as a SinglePartition shuffle; coalesce(1) gives the
+        # same layout without writing the table to a second shuffle
         frame = derivation(read_table(spark, sf_dir, table))
         return frame.coalesce(1).persist()
 
-    return session_memo(spark, ("prices", sf_dir, table), build,
+    return session_memo(spark, ("derived", sf_dir, name), build,
                         stamp=table_stamp(sf_dir, table))
 
 
@@ -91,7 +101,8 @@ def prices(spark: SparkSession, sf_dir: str,
     filter on the derived 'P'||key string cannot push down).
     """
     if max_partkey is None:
-        return _session_prices(spark, sf_dir, "lineitem", _prices_of)
+        return _session_table(spark, sf_dir, "prices", "lineitem",
+                              _prices_of)
     li = read_table(spark, sf_dir, "lineitem")
     return _prices_of(li.filter((F.col("l_partkey") >= 1)
                                 & (F.col("l_partkey") <= max_partkey)))
@@ -132,8 +143,10 @@ def trades(spark: SparkSession, sf_dir: str) -> DataFrame:
       qty = 1 + (event_id % 10), price = abs(value) + 1, fee = (event_id % 5) * 0.25
     The ledger may oversell — the reference fold clamps sells
     (portfolio.py:37,106), so any ledger is valid fold input.
+    Session-memoized in one partition (module docstring).
     """
-    return trades_projection(read_table(spark, sf_dir, "events"))
+    return _session_table(spark, sf_dir, "trades", "events",
+                          trades_projection)
 
 
 def raw_trades(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -162,7 +175,8 @@ def tick_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     trades ⟕ prices joins have matching keys: close = min(value) per
     (event_type, date). min: exact, order-insensitive.
     Session-memoized (module docstring)."""
-    return _session_prices(spark, sf_dir, "events", _tick_prices_of)
+    return _session_table(spark, sf_dir, "tick_prices", "events",
+                          _tick_prices_of)
 
 
 def _tick_prices_of(ev: DataFrame) -> DataFrame:

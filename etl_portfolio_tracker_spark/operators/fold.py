@@ -15,15 +15,19 @@ the recurrence non-linear) → Python fold over Arrow batches.
 
 Physical design (measured, not guessed): groupBy().applyInPandas
 costs ~10 ms *per group* in scheduling/FFI overhead — 8-10 s for 750
-keys at sf0.1 even with a no-op kernel. Instead: one shuffle
-(`repartition` on the key), one sort within partitions
-(key, ts, id), then `mapInPandas` streaming whole Arrow batches
-through a single Python loop that detects key boundaries and carries
-state across batch boundaries. Same float semantics (sequential
-left-associated IEEE ops per key — bit-identical to the reference
-Python loop and the DuckDB recursive-CTE oracle), 15× faster, and at
-100 TB it is exactly one exchange + one external sort, with keys
-spread across all executors.
+keys at sf0.1 even with a no-op kernel. Instead: at most one shuffle
+(`cluster_by_key`), one sort within partitions (key, ts, id), then
+`mapInPandas` streaming whole Arrow batches through a single Python
+loop that detects key boundaries and carries state across batch
+boundaries. Same float semantics (sequential left-associated IEEE ops
+per key — bit-identical to the reference Python loop and the DuckDB
+recursive-CTE oracle), 15× faster. The shuffle is conditional: an
+input whose planned output is already one partition (the
+session-memoized ledger, `derive.trades`) holds every key in that
+partition and is folded in place; any other input (a raw scan, the
+`record_trades` union) is repartitioned on the key, so at 100 TB it is
+exactly one exchange + one external sort, with keys spread across all
+executors.
 """
 
 from __future__ import annotations
@@ -79,11 +83,24 @@ def _fold_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                                      "realized"])
 
 
+def cluster_by_key(df: DataFrame, *keys: str) -> DataFrame:
+    """`df` with all rows of each `keys` value in one partition: as is
+    when its planned physical output is already one partition, else
+    repartitioned on `keys` (an explicit repartition always shuffles,
+    even a one-partition input). Decided from the plan alone:
+    `df.rdd.getNumPartitions()` can run the frame's shuffle stages at
+    construct time under AQE."""
+    plan = df._jdf.queryExecution().sparkPlan()
+    if plan.outputPartitioning().numPartitions() == 1:
+        return df
+    return df.repartition(*keys)
+
+
 def portfolio_fold(trades: DataFrame) -> DataFrame:
     """Final (qty, avg_cost, realized) per (user, ticker)."""
-    return (trades
-            .select("user", "ticker", "ts", "id", "side", "qty", "price", "fee")
-            .repartition("user", "ticker")
+    cols = trades.select("user", "ticker", "ts", "id", "side", "qty",
+                         "price", "fee")
+    return (cluster_by_key(cols, "user", "ticker")
             .sortWithinPartitions("user", "ticker", "ts", "id")
             .mapInPandas(_fold_batches, schema=FOLD_SCHEMA))
 

@@ -33,7 +33,12 @@ def positions(trades: DataFrame) -> DataFrame:
 
 def current_qty(trades: DataFrame, user: str, ticker: str) -> DataFrame:
     """A2 — scalar holding for one (user, ticker) (trades.py:28-38).
-    The equality filter pushes to the parquet scan before the agg."""
+    Over the session-memoized ledger (`derive.trades`) the equality
+    filter runs on the one-partition cached scan, where the in-memory
+    column statistics can skip batches; nothing reaches parquet. Over
+    an unmemoized `derive.trades_projection` of events, the `ticker`
+    equality pushes to the parquet scan (`user` is derived, so its
+    equality cannot)."""
     return (trades.filter((F.col("user") == user) & (F.col("ticker") == ticker))
             .agg(F.coalesce(F.sum(signed_qty()), F.lit(0.0)).alias("qty")))
 

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .fold import cluster_by_key
+
 
 EPS = 1e-12  # trades.py:53
 
@@ -67,9 +69,10 @@ def reject_oversells(trades: DataFrame) -> DataFrame:
     from collections.abc import Iterator
     from pyspark.sql import types as T
 
-    out_schema = T.StructType(trades.select(
-        "id", "user", "ticker", "ts", "side", "qty", "price", "fee").schema.fields
-        + [T.StructField("accepted", T.BooleanType())])
+    cols = trades.select("id", "user", "ticker", "ts", "side", "qty",
+                         "price", "fee")
+    out_schema = T.StructType(
+        cols.schema.fields + [T.StructField("accepted", T.BooleanType())])
 
     def _guard(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cur = None
@@ -96,9 +99,7 @@ def reject_oversells(trades: DataFrame) -> DataFrame:
             pdf["accepted"] = acc
             yield pdf
 
-    return (trades
-            .select("id", "user", "ticker", "ts", "side", "qty", "price", "fee")
-            .repartition("user", "ticker")
+    return (cluster_by_key(cols, "user", "ticker")
             .sortWithinPartitions("user", "ticker", "ts", "id")
             .mapInPandas(_guard, schema=out_schema))
 

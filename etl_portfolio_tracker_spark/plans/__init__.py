@@ -14,5 +14,6 @@ from .audit import (  # noqa: F401
     physical_plan,
     pushed_filters,
     scan_columns,
+    single_partition_cache_scans,
     single_partition_rows,
 )

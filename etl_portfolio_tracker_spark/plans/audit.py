@@ -76,33 +76,72 @@ def single_partition_rows(df: DataFrame) -> list[int]:
     AQE query stages are unwrapped and deduped by plan node id."""
     out: list[int] = []
     seen: set[int] = set()
+    for node in _executed_nodes(df):
+        if node.getClass().getSimpleName() != "ShuffleExchangeExec":
+            continue
+        nid = node.id()
+        if nid in seen:
+            continue
+        seen.add(nid)
+        if node.outputPartitioning().toString() == "SinglePartition":
+            it = node.metrics().iterator()
+            written = 0
+            while it.hasNext():
+                kv = it.next()
+                if kv._1() == "shuffleRecordsWritten":
+                    written = kv._2().value()
+            out.append(int(written))
+    return out
 
-    def visit(node) -> None:
+
+def single_partition_cache_scans(df: DataFrame) -> list[int]:
+    """Row count of each in-memory table scan in the executed plan
+    whose output is ONE partition (call after an action, so the cache
+    is built and its row count known).
+
+    A session-memoized table laid out by ``coalesce(1)`` funnels its
+    readers through one task as surely as an ``Exchange
+    SinglePartition`` does, yet plans no exchange, so
+    `single_partition_rows` cannot see it. This is a report, not a
+    check: a one-partition memo is a deliberate layout, and its row
+    count says when it stops being a cheap one. Scans are deduped by
+    cached relation."""
+    out: list[int] = []
+    seen: set[int] = set()
+    for node in _executed_nodes(df):
+        if node.getClass().getSimpleName() != "InMemoryTableScanExec":
+            continue
+        # the scan's partitioning, which is what its readers plan
+        # against (an adaptive cached plan reports an unknown one)
+        builder = node.relation().cacheBuilder()
+        cached = builder.cachedPlan().id()
+        if node.outputPartitioning().numPartitions() == 1 \
+                and cached not in seen:
+            seen.add(cached)
+            out.append(int(builder.rowCountStats().value()))
+    return out
+
+
+def _executed_nodes(df: DataFrame):
+    """The nodes of the executed plan in pre-order, with AQE's
+    wrappers unwrapped: an adaptive plan yields its current plan's
+    nodes, a query stage or reused exchange its plan's."""
+    def walk(node):
         cls = node.getClass().getSimpleName()
         if cls == "AdaptiveSparkPlanExec":
-            visit(node.executedPlan())
+            yield from walk(node.executedPlan())
             return
         if "QueryStageExec" in cls or cls == "ReusedExchangeExec":
             try:
-                visit(node.plan())
-                return
+                inner = node.plan()
             except Exception:
-                pass  # fall through to generic children walk
-        if cls == "ShuffleExchangeExec":
-            nid = node.id()
-            if nid not in seen:
-                seen.add(nid)
-                if node.outputPartitioning().toString() == "SinglePartition":
-                    it = node.metrics().iterator()
-                    written = 0
-                    while it.hasNext():
-                        kv = it.next()
-                        if kv._1() == "shuffleRecordsWritten":
-                            written = kv._2().value()
-                    out.append(int(written))
+                inner = None  # no plan(): walk its children instead
+            if inner is not None:
+                yield from walk(inner)
+                return
+        yield node
         ch = node.children()
         for i in range(ch.size()):
-            visit(ch.apply(i))
+            yield from walk(ch.apply(i))
 
-    visit(df._jdf.queryExecution().executedPlan())
-    return out
+    return walk(df._jdf.queryExecution().executedPlan())

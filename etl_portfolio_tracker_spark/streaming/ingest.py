@@ -47,18 +47,28 @@ def dedup_stream(stream: DataFrame,
             .dropDuplicates(["ticker", "ts"]))
 
 
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Whether `path` exists, asked of its Hadoop file system directly
+    (no Spark job)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+
+
 def write_idempotent(stream: DataFrame, target_dir: str,
                      checkpoint_dir: str):
     """foreachBatch idempotent merge: only key-new rows are appended,
     so micro-batch replays after failure don't duplicate (the
-    INSERT OR IGNORE contract, S5)."""
+    INSERT OR IGNORE contract, S5). A batch arriving before the target
+    exists creates it; an unreadable target fails the query."""
     def _merge(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        try:
+        fresh = batch
+        # only a missing target is the first batch; a target that
+        # exists but cannot be read fails the query instead of
+        # silently taking duplicates
+        if _exists(spark, target_dir):
             existing = spark.read.parquet(target_dir).select("ticker", "ts")
             fresh = batch.join(existing, ["ticker", "ts"], "left_anti")
-        except Exception:  # first batch: target doesn't exist yet
-            fresh = batch
         fresh.write.mode("append").parquet(target_dir)
 
     return (stream.writeStream

@@ -95,3 +95,24 @@ def test_failing_edges_raise_root_cause_and_leak_nothing(
     with pytest.raises(Exception, match="cc-root-cause"):
         DD.min_label_components(labels0, bad)
     assert not _persisted(spark) - before
+
+
+def test_failed_curation_build_raises_root_cause_and_leaks_nothing(
+        spark, sf_dir, checkpoint_dir, monkeypatch):
+    # a stage that fails once clusters is persisted and verified is on
+    # its way: the thread-pooled build surfaces the root cause and
+    # unpersists every frame it persisted (clusters, verdict, verified
+    # included)
+    from pyspark.sql import functions as F
+    import __spark_entry__ as E
+
+    def failing_prune(docs, clusters, exact, qual):
+        return clusters.select(F.assert_true(
+            F.col("doc_id") < 0, F.lit("prune-root-cause")).alias("x"))
+
+    monkeypatch.setattr(DD, "corpus_prune", failing_prune)
+    E._docs(spark, sf_dir)  # its memo is not part of the build
+    before = _persisted(spark)
+    with pytest.raises(Exception, match="prune-root-cause"):
+        E._curation_build(spark, sf_dir)
+    assert not _persisted(spark) - before

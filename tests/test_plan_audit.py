@@ -685,15 +685,31 @@ def test_portfolio_twr_single_user_exchange(spark):
     # exactly one shuffle, hash(user) alone; the only other exchange
     # is the (ticker, ts) price aggregate under the broadcast. A join
     # on (user, ticker, ts) would re-shuffle on all three keys.
+    # The unmemoized ledger projection keeps the operator's own plan in
+    # view (over the one-partition ledger memo it plans no exchange).
     import re
     import __spark_entry__ as E
+    from etl_portfolio_tracker_spark.io import read_table
+    from etl_portfolio_tracker_spark.operators import windowed as WD
     from etl_portfolio_tracker_spark.plans import physical_plan
-    q = E.queries()["portfolio_twr"](spark, SF)
+    q = WD.portfolio_twr(
+        derive.trades_projection(read_table(spark, SF, "events")),
+        E._thinned_tick_prices(spark, SF))
     user_ex = exchanges(q, "user")
     assert len(user_ex) == 1
     assert re.search(r"hashpartitioning\(user#\d+, \d+\)", user_ex[0])
     assert all(e in user_ex or "hashpartitioning(ticker" in e
                for e in exchanges(q))
+    assert "SortMergeJoin" not in physical_plan(q)
+
+
+def test_portfolio_twr_no_user_exchange_over_ledger_memo(spark):
+    # the memoized ledger is one partition, which already satisfies
+    # the per-user clustering: the registered query shuffles no user key
+    import __spark_entry__ as E
+    from etl_portfolio_tracker_spark.plans import physical_plan
+    q = E.queries()["portfolio_twr"](spark, SF)
+    assert exchanges(q, "user") == []
     assert "SortMergeJoin" not in physical_plan(q)
 
 
@@ -761,6 +777,10 @@ def test_tick_prices_memo_superseded_by_rewrite(spark, private_sf):
     old_rows = {(r.ticker, r.ts): r.close for r in old.collect()}
     old_rdds = persisted() - before
     assert old_rdds
+    old_ledger = derive.trades(spark, sf)
+    old_prices = {r.id: r.price for r in old_ledger.collect()}
+    old_ledger_rdds = persisted() - before - old_rdds
+    assert old_ledger_rdds
     ev = pq.read_table(f"{sf}/events.parquet")
     ev = ev.set_column(ev.schema.get_field_index("value"), "value",
                        pc.add(ev["value"], 1000.0))
@@ -772,6 +792,46 @@ def test_tick_prices_memo_superseded_by_rewrite(spark, private_sf):
     assert not old_rdds & persisted()
     new_rows = {(r.ticker, r.ts): r.close for r in new.collect()}
     assert new_rows == {k: v + 1000.0 for k, v in old_rows.items()}
+    new_ledger = derive.trades(spark, sf)
+    assert new_ledger is not old_ledger
+    assert not old_ledger_rdds & persisted()
+    assert {r.id: r.price for r in new_ledger.collect()} != old_prices
+
+
+# --- session-memoized trade ledger --------------------------------------------
+
+# the queries that read only derive.trades
+TRADES_ONLY = ("positions", "current_qty", "cash_balance", "trades_list",
+               "cash_series", "cum_position_series", "first_holding_day",
+               "avg_costs", "realized_pnl", "oversell_guard")
+
+
+@pytest.mark.parametrize("name", TRADES_ONLY)
+def test_warm_trades_consumer_runs_one_job(spark, name):
+    # the cached ledger is one partition: the per-user and per-(user,
+    # ticker) aggregates, windows, sorts and folds need no shuffle
+    import __spark_entry__ as E
+    E.queries()[name](spark, SF).collect()  # warm the memo
+    q = E.queries()[name](spark, SF)
+    assert _jobs_launched(spark, q) == 1
+    assert "Exchange" not in _above_cache_scan(q)
+
+
+def test_single_partition_cache_scans_reports_memos(spark):
+    # the audit sees both one-partition memos overview reads, with
+    # their row counts (events is 1000 rows, tick_prices 150)
+    import __spark_entry__ as E
+    from etl_portfolio_tracker_spark.plans import single_partition_cache_scans
+    q = E.queries()["overview"](spark, SF)
+    q.collect()
+    assert sorted(single_partition_cache_scans(q)) == [150, 1000]
+
+
+def test_trades_memo_shared_and_built_once(spark, private_sf):
+    sf = private_sf("events")
+    assert _jobs_during(spark, lambda: derive.trades(spark, sf)) == 0
+    assert derive.trades(spark, sf) is derive.trades(spark, sf)
+    assert derive.trades(spark, sf).rdd.getNumPartitions() == 1
 
 
 # --- connected components: one join per round ---------------------------------

@@ -46,6 +46,23 @@ def test_streaming_dedup_idempotent_ingest(spark, tmpdir):
     assert len(out) == 3                              # (A,1), (B,1), (A,2)
 
 
+def test_idempotent_ingest_fails_on_unreadable_target(spark, tmpdir):
+    # only a missing target is a first batch: a target that exists but
+    # cannot be read fails the query rather than taking an append
+    import os
+    from pyspark.errors import StreamingQueryException
+    src, tgt, chk = f"{tmpdir}/src", f"{tmpdir}/tgt", f"{tmpdir}/chk"
+    _write_price_batch(spark, src, [("A", 1, 10.0)])
+    os.makedirs(tgt)
+    with open(f"{tgt}/part-00000-corrupt.parquet", "wb") as f:
+        f.write(b"not a parquet file")
+    q = ingest.write_idempotent(
+        ingest.dedup_stream(ingest.read_price_stream(spark, src)), tgt, chk)
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    assert os.listdir(tgt) == ["part-00000-corrupt.parquet"]
+
+
 def test_streaming_tumbling_window(spark, tmpdir):
     src = f"{tmpdir}/ev"
     base = dt.datetime(2025, 1, 1, 10, 5, 0)

@@ -17,6 +17,15 @@ tables, k<=100 top-k heads, d<=64 model states, 9-digit Benford
 rows) and well below the smallest fact-scaling cardinality
 (|customers| = 1500 at sf0.01).
 
+A session-memoized table laid out by ``coalesce(1)`` is a one-
+partition input too, but plans no ``Exchange SinglePartition``. Each
+line therefore also lists, as ``cached_1p``, the row count of every
+one-partition in-memory table scan the query reads
+(plans.single_partition_cache_scans), and the summary names the
+largest. That column is a report, never a failure: the layout is
+deliberate (derive.py docstring), and the row counts show when a memo
+outgrows it.
+
 Usage: python tools/single_partition_audit.py [sf_dir] [query ...]
 Exit code 1 if any non-allowlisted query exceeds the threshold.
 """
@@ -45,19 +54,22 @@ def main() -> int:
         sf_dir, args = args[0], args[1:]
 
     import __spark_entry__ as E
-    from etl_portfolio_tracker_spark.plans import single_partition_rows
+    from etl_portfolio_tracker_spark.plans import (
+        single_partition_cache_scans, single_partition_rows)
     from etl_portfolio_tracker_spark.session import get_spark
 
     spark = get_spark("sp_audit")
     qs = E.queries()
     names = args or list(qs)
     failures = []
+    cached_1p: dict[str, int] = {}  # query -> largest one-partition cache
     for name in names:
         t0 = time.time()
         try:
             df = qs[name](spark, sf_dir)
             df.collect()
             rows = single_partition_rows(df)
+            cached = single_partition_cache_scans(df)
         except Exception as ex:  # noqa: BLE001
             print(f"ERR  {name}: {str(ex)[:120]}")
             failures.append(name)
@@ -70,10 +82,16 @@ def main() -> int:
             else:
                 status = "FAIL"
                 failures.append(name)
+        if cached:
+            cached_1p[name] = max(cached)
         print(f"{status:5s} {name}: sp_exchanges={rows} worst={worst} "
-              f"[{time.time()-t0:.1f}s]")
+              f"cached_1p={cached} [{time.time()-t0:.1f}s]")
     print(f"\n{len(names) - len(failures)} ok / {len(failures)} fail "
           f"(threshold {THRESHOLD} rows into any SinglePartition)")
+    if cached_1p:
+        top = max(cached_1p, key=cached_1p.get)
+        print(f"report: {len(cached_1p)} queries read a one-partition "
+              f"cached scan; largest {cached_1p[top]} rows ({top})")
     return 1 if failures else 0
 
 

@@ -28,15 +28,6 @@ def normalize_text_udf(s: pd.Series) -> pd.Series:
                                          if x is not None else None)
 
 
-@pandas_udf(T.DoubleType())
-def weighted_mid_udf(bid: pd.Series, ask: pd.Series,
-                     bid_sz: pd.Series, ask_sz: pd.Series) -> pd.Series:
-    """Example numeric kernel: size-weighted midprice — the sort of
-    per-row finance math users may want as a custom function."""
-    tot = bid_sz + ask_sz
-    return (bid * ask_sz + ask * bid_sz) / tot.where(tot != 0)
-
-
 def builtin_normalize(col):
     """The JVM-side normalize chain the UDF mirrors."""
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")

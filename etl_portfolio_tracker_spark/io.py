@@ -1,4 +1,4 @@
-"""Readers over the harness parquet tables + idempotent sinks.
+"""Readers over the harness parquet tables + the idempotent price sink.
 
 Reference analogs:
   - S3 table scan (`pd.read_sql_query`, app/services/trades.py:78) →
@@ -6,12 +6,12 @@ Reference analogs:
     into the scan.
   - S4 CSV scan with alias normalization (app/services/universe.py:31).
   - S5 idempotent upsert (`INSERT OR IGNORE` keyed on (ticker, ts),
-    src/etl.py:46-65) → left-anti append (no unique indexes in Spark).
+    src/etl.py:46-65) → `upsert_prices`, a left-anti append that the
+    batch ETL and the streaming ingest share.
 
-Scale posture: `write_prices_partitioned` lays prices out
-`partitionBy(ts_year)` so the P5 time-range predicates become
-partition pruning at 100 TB; the anti-join dedup broadcasts the
-*incoming batch's key set* when small, never the existing table.
+Scale posture: prices are appended `partitionBy(ts_year)` so the P5
+time-range predicates become partition pruning at 100 TB; files
+already written are never rewritten.
 """
 
 from __future__ import annotations
@@ -27,24 +27,30 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def table_files(sf_dir: str, name: str) -> list[str]:
-    """The parquet files of a harness table (a file or a directory)."""
-    p = table_path(sf_dir, name)
-    if os.path.isdir(p):
-        return sorted(os.path.join(p, f) for f in os.listdir(p)
-                      if f.endswith(".parquet"))
-    return [p]
+def parquet_files(path: str) -> list[str]:
+    """The parquet files of the table at `path` (a file, or a directory
+    searched through its partitions), skipping `_`/`.`-prefixed entries
+    as Spark does: a failed write's `_temporary` holds no table rows."""
+    if not os.path.isdir(path):
+        return [path]
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        files += [os.path.join(root, n) for n in names
+                  if n.endswith(".parquet") and not n.startswith(("_", "."))]
+    return sorted(files)
+
+
+def parquet_num_rows(path: str) -> int:
+    """Exact row count from the parquet FOOTERS — catalog statistics
+    with ZERO Spark jobs (a footer is the file-level metastore): sizes
+    model-scale knobs without a driver-blocking count()."""
+    import pyarrow.parquet as pq
+    return sum(pq.read_metadata(f).num_rows for f in parquet_files(path))
 
 
 def table_num_rows(sf_dir: str, name: str) -> int:
-    """Exact row count from the parquet FOOTER — catalog-statistics
-    sizing with ZERO Spark jobs (the 100 TB form reads table stats
-    from the metastore; a parquet footer is the file-level metastore).
-    Used to size model-scale knobs (e.g. the SemDeDup codebook's
-    n_cells) without a driver-blocking count() before the main job."""
-    import pyarrow.parquet as pq
-    return sum(pq.read_metadata(f).num_rows
-               for f in table_files(sf_dir, name))
+    return parquet_num_rows(table_path(sf_dir, name))
 
 
 def table_stamp(sf_dir: str, name: str) -> tuple:
@@ -52,7 +58,7 @@ def table_stamp(sf_dir: str, name: str) -> tuple:
     version of the input that session-memoized frames are keyed on, so
     a rewritten file supersedes them."""
     stamp = []
-    for f in table_files(sf_dir, name):
+    for f in parquet_files(table_path(sf_dir, name)):
         st = os.stat(f)
         stamp.append((f, st.st_size, st.st_mtime_ns))
     return tuple(stamp)
@@ -132,31 +138,38 @@ def read_csv_universe(spark: SparkSession, path: str, sep: str = ";") -> DataFra
     return df
 
 
-def idempotent_append(existing: DataFrame, batch: DataFrame,
-                      keys: list[str]) -> DataFrame:
-    """S5 `INSERT OR IGNORE` as a left-anti join: rows of `batch` whose
-    key already exists in `existing` are dropped, then unioned.
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether `path` exists, asked of its Hadoop file system directly
+    (no Spark job)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
 
-    In-batch duplicates collapse to one deterministic winner (min of all
-    non-key columns) so re-runs are idempotent, matching the unique
-    index `uq_prices` (src/etl.py:59).
+
+def upsert_prices(spark: SparkSession, batch: DataFrame,
+                  target: str) -> None:
+    """S5 `INSERT OR IGNORE` on (ticker, ts): append the rows of `batch`
+    whose key the parquet table at `target` lacks. `batch` must already
+    be unique on (ticker, ts): each caller keeps its own duplicate
+    policy. A missing target is the first batch; an existing one is
+    read with the batch's key schema (no schema-inference job), and one
+    that cannot be read fails the call. New rows land `partitionBy
+    (ts_year)`, (ticker, ts)-sorted, with no repartition: the layout
+    `read_prices_range` prunes. No existing file is rewritten.
+
+    Left out, as no workload shows a gain: reading only the `ts_year`
+    partitions the batch touches (finding them costs a job; the anti
+    join reads every key), compaction (each call adds files; see
+    `compact`), and migrating sinks written flat before this layout.
     """
-    others = [c for c in batch.columns if c not in keys]
-    dedup_batch = batch.groupBy(*keys).agg(
-        *[F.min(c).alias(c) for c in others]
-    ).select(*existing.columns)
-    fresh = dedup_batch.join(existing.select(*keys), on=keys, how="left_anti")
-    return existing.unionByName(fresh)
-
-
-def write_prices_partitioned(prices: DataFrame, path: str) -> None:
-    """Storage layout for the prices table at scale: partition by year
-    so P5 range predicates prune partitions; within a partition parquet
-    min/max stats skip row groups on ticker."""
-    (prices.withColumn("ts_year", F.year("ts"))
-     .repartition("ts_year")
-     .sortWithinPartitions("ticker", "ts")
-     .write.partitionBy("ts_year").mode("overwrite").parquet(path))
+    keys = ["ticker", "ts"]
+    fresh = batch
+    if path_exists(spark, target):
+        existing = (spark.read.schema(batch.select(*keys).schema)
+                    .parquet(target).select(*keys))
+        fresh = batch.join(existing, keys, "left_anti")
+    (fresh.withColumn("ts_year", F.year("ts"))
+     .sortWithinPartitions("ts_year", "ticker", "ts")
+     .write.partitionBy("ts_year").mode("append").parquet(target))
 
 
 def read_prices_range(spark: SparkSession, path: str,

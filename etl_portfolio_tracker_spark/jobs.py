@@ -5,8 +5,10 @@ src/etl.py:24-74, SURVEY §3.1).
 extract: any source readable by spark.read (the harness uses parquet;
 the reference used a wide per-ticker HTTP download — a wide frame is
 accepted and unpivoted). tidy: unpivot wide→long, date-normalize,
-null-drop, project (etl.py:31-43). load: dedup-append keyed on
-(ticker, ts) into the partitioned layout (etl.py:46-65).
+null-drop, project (etl.py:31-43). load: in-batch duplicates collapse
+to min(close) (the unique index `uq_prices`, etl.py:59), then
+`io.upsert_prices` appends only the key-new rows into the partitioned
+layout (etl.py:46-65); files already in the target are never rewritten.
 
 Each run is idempotent: re-running on overlapping data is a no-op for
 existing keys — same contract as the unique index + INSERT OR IGNORE.
@@ -18,7 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .io import idempotent_append, write_prices_partitioned
+from .io import parquet_num_rows, upsert_prices
 
 
 def tidy_prices(raw: DataFrame, wide: bool = False) -> DataFrame:
@@ -34,22 +36,15 @@ def tidy_prices(raw: DataFrame, wide: bool = False) -> DataFrame:
 def run_price_etl(spark: SparkSession, source_path: str, target_path: str,
                   wide: bool = False) -> dict:
     """One scheduled run: returns counts for the job log (S9 —
-    etl.py:67-74 logs rows fetched/inserted)."""
-    batch = tidy_prices(spark.read.parquet(source_path), wide=wide)
-    if os.path.exists(target_path):
-        existing = (spark.read.parquet(target_path)
-                    .select("ticker", "ts", "close"))
-    else:
-        existing = spark.createDataFrame([], "ticker string, ts date, close double")
-    merged = idempotent_append(existing, batch, ["ticker", "ts"])
-    n_before = existing.count()
-    write_prices_partitioned(merged, target_path + "__new")
-    # atomic-ish swap (a real deployment uses Delta/table formats)
-    if os.path.exists(target_path):
-        import shutil
-        shutil.rmtree(target_path)
-    os.rename(target_path + "__new", target_path)
-    n_after = spark.read.parquet(target_path).count()
+    etl.py:67-74 logs rows fetched/inserted). The counts come from the
+    target's parquet footers before and after the load, so they cost
+    no Spark job; the target must be on the local file system."""
+    batch = (tidy_prices(spark.read.parquet(source_path), wide=wide)
+             .groupBy("ticker", "ts").agg(F.min("close").alias("close")))
+    n_before = (parquet_num_rows(target_path)
+                if os.path.exists(target_path) else 0)
+    upsert_prices(spark, batch, target_path)
+    n_after = parquet_num_rows(target_path)
     return {"existing": n_before, "after": n_after,
             "inserted": n_after - n_before}
 

@@ -412,20 +412,6 @@ def _signature_wide(docs: DataFrame, n_seeds: int) -> DataFrame:
     ])
 
 
-def minhash_signatures(docs: DataFrame,
-                       n_seeds: int = MINHASH_SEEDS) -> DataFrame:
-    """MinHash signature rows (doc_id, seed, minhash): for each seed,
-    min over shingles of md5(seed || ':' || shingle). Min of a uniform
-    hash ≈ minwise permutation (Broder); md5-hex min is taken as a
-    string (uniform, portable)."""
-    wide = _signature_wide(docs, n_seeds)
-    return wide.unpivot(
-        "doc_id", [f"h{s}" for s in range(n_seeds)], "seed_name", "minhash") \
-        .select("doc_id",
-                F.regexp_replace("seed_name", "h", "").cast("int").alias("seed"),
-                "minhash")
-
-
 def minhash_band_keys(docs: DataFrame,
                       n_seeds: int = MINHASH_SEEDS,
                       band_rows: int = LSH_BAND_ROWS) -> DataFrame:

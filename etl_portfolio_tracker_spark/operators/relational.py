@@ -118,11 +118,6 @@ def price_range_scan(prices: DataFrame, start: str, end: str) -> DataFrame:
                  F.max("close").alias("max_close")))
 
 
-def distinct_tickers(trades: DataFrame) -> DataFrame:
-    """A8 — distinct held tickers (1_Dashboard.py:160)."""
-    return trades.select("ticker").distinct()
-
-
 def positions_state(trades: DataFrame) -> DataFrame:
     """UNFILTERED per-(user, ticker) net-position aggregate — the
     stored state of incremental view maintenance. The HAVING qty != 0

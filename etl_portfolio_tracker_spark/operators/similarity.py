@@ -83,12 +83,6 @@ def _spread(emb: DataFrame) -> DataFrame:
     return spread(emb, "vec_id")
 
 
-def vector_norms(emb: DataFrame) -> DataFrame:
-    """|v| per vector — row-local decimal sum of squares, one sqrt."""
-    return _spread(emb).select(
-        "vec_id", F.expr(_norm_sql("embedding")).alias("norm"))
-
-
 def _query_row(emb: DataFrame, query_vec_id: int) -> DataFrame:
     """1-row frame (_q, _qnorm) for the query vector — broadcast to
     every row so the dot product is row-local."""

@@ -4,24 +4,26 @@ SURVEY §2.12).
 
 Contract reproduced:
   - exactly-once-per-key: `(ticker, ts)` unique index + INSERT OR
-    IGNORE (etl.py:59-63) → watermark + dropDuplicates on the key,
-    plus an idempotent foreachBatch sink (left-anti merge) so replays
-    and late duplicates are no-ops end-to-end.
+    IGNORE (etl.py:59-63) → watermark + dropDuplicates on the key (the
+    first arrival wins; `io.upsert_prices` requires a key-unique
+    batch), then a foreachBatch sink through `io.upsert_prices`, the
+    batch ETL's load, so replays and late duplicates are no-ops.
   - late data: the reference accepts arbitrarily late rows; a stream
     must bound state, so the watermark (default 7 days, matching the
     5d/14d re-fetch windows at etl.py:24 / 2_Trades.py:32) is the
     documented divergence: rows later than the watermark are dropped.
 
-Scale: dropDuplicates state is hash-partitioned by key across
-executors; the sink merge is per-micro-batch left-anti against the
-target, which at 100 TB should be a Delta MERGE (file-skipping on
-(ticker, ts_date)) — the parquet left-anti here has the same
-semantics with the whole-target scan cost noted.
+Sink layout: the ETL target's — parquet `partitionBy(ts_year)`, so
+`io.read_prices_range` prunes it. At 100 TB the per-micro-batch
+left-anti join against the whole target should be a Delta MERGE
+(file-skipping on (ticker, ts_date)).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..io import upsert_prices
 
 
 DEFAULT_WATERMARK = "7 days"
@@ -47,29 +49,13 @@ def dedup_stream(stream: DataFrame,
             .dropDuplicates(["ticker", "ts"]))
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
-    """Whether `path` exists, asked of its Hadoop file system directly
-    (no Spark job)."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
-
-
 def write_idempotent(stream: DataFrame, target_dir: str,
                      checkpoint_dir: str):
-    """foreachBatch idempotent merge: only key-new rows are appended,
-    so micro-batch replays after failure don't duplicate (the
-    INSERT OR IGNORE contract, S5). A batch arriving before the target
-    exists creates it; an unreadable target fails the query."""
+    """foreachBatch idempotent merge (`io.upsert_prices`) of a stream
+    already unique on (ticker, ts), e.g. `dedup_stream`'s: replays
+    append nothing (the INSERT OR IGNORE contract, S5)."""
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        fresh = batch
-        # only a missing target is the first batch; a target that
-        # exists but cannot be read fails the query instead of
-        # silently taking duplicates
-        if _exists(spark, target_dir):
-            existing = spark.read.parquet(target_dir).select("ticker", "ts")
-            fresh = batch.join(existing, ["ticker", "ts"], "left_anti")
-        fresh.write.mode("append").parquet(target_dir)
+        upsert_prices(batch.sparkSession, batch, target_dir)
 
     return (stream.writeStream
             .foreachBatch(_merge)

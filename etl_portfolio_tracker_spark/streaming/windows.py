@@ -1,6 +1,7 @@
 """Streaming windowed aggregations over event streams (SURVEY §2.12
-extension tier): tumbling, sliding, session windows with watermarked
-late-data handling. Batch twins live in operators/sessions.py."""
+extension tier): tumbling windows with watermarked late-data
+handling. Batch sliding and session windows live in
+operators/sessions.py."""
 
 from __future__ import annotations
 
@@ -21,28 +22,3 @@ def tumbling_counts(events: DataFrame, size: str = "1 hour",
             .select(F.col("window.start").alias("win_start"),
                     F.col("window.end").alias("win_end"),
                     "event_type", "n_events", "sum_value"))
-
-
-def sliding_value_avg(events: DataFrame, size: str = "1 hour",
-                      slide: str = "15 minutes",
-                      watermark: str = "2 hours") -> DataFrame:
-    """Sliding window mean value per event_type."""
-    return (events
-            .withWatermark("ts", watermark)
-            .groupBy(F.window("ts", size, slide), "event_type")
-            .agg(F.avg("value").alias("avg_value"))
-            .select(F.col("window.start").alias("win_start"),
-                    "event_type", "avg_value"))
-
-
-def session_counts(events: DataFrame, gap: str = "30 minutes",
-                   watermark: str = "2 hours") -> DataFrame:
-    """Session windows per user: merge events with gaps ≤ `gap`
-    (streaming twin of operators/sessions.sessionize)."""
-    return (events
-            .withWatermark("ts", watermark)
-            .groupBy(F.session_window("ts", gap), "user_id")
-            .agg(F.count("*").alias("n_events"),
-                 F.min("ts").alias("session_start"),
-                 F.max("ts").alias("session_end"))
-            .select("user_id", "session_start", "session_end", "n_events"))

@@ -49,6 +49,55 @@ def test_price_etl_wide_source(spark, tmp_path):
     assert set(out.select("ticker").distinct().toPandas()["ticker"]) == {"AAPL", "MSFT"}
 
 
+def _jobs_during(spark, action):
+    import uuid
+    sc = spark.sparkContext
+    group = "etl-" + uuid.uuid4().hex[:8]
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_price_etl_appends_without_rewrite(spark, tmp_path):
+    # a load appends only its new rows: the files of earlier loads stay
+    # byte-for-byte, new files land only in the years the batch touches
+    # and the counts come off the footers, not off Spark re-counts
+    import glob
+    import os
+
+    def source(name, rows):
+        path = str(tmp_path / name)
+        spark.createDataFrame(rows, schema=schemas.PRICES) \
+            .coalesce(1).write.parquet(path)
+        return path
+
+    def stats():
+        return {f: (os.stat(f).st_size, os.stat(f).st_mtime_ns)
+                for f in glob.glob(f"{tgt}/**/*.parquet", recursive=True)}
+
+    tgt = str(tmp_path / "prices")
+    src1 = source("src1", [("A", dt.date(2024, 12, 30), 10.0),
+                           ("A", dt.date(2025, 1, 2), 11.0),
+                           ("B", dt.date(2024, 12, 30), 7.0)])
+    src2 = source("src2", [("A", dt.date(2025, 1, 2), 99.0),
+                           ("B", dt.date(2025, 1, 3), 8.0)])
+    jobs.run_price_etl(spark, src1, tgt)
+    first = stats()
+    r2, n_jobs = _jobs_during(spark, lambda: jobs.run_price_etl(
+        spark, src2, tgt))
+    after = stats()
+    assert r2 == {"existing": 3, "after": 4, "inserted": 1}
+    assert {f: after.get(f) for f in first} == first
+    new = set(after) - set(first)
+    assert new and all(os.path.basename(os.path.dirname(f)) == "ts_year=2025"
+                       for f in new)
+    assert n_jobs <= 5, n_jobs
+
+
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     # Bucketed-by-join-key tables must sort-merge join with no
     # Exchange on the key — the co-location contract at cluster scale.

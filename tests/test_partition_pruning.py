@@ -12,9 +12,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from etl_portfolio_tracker_spark import schemas
-from etl_portfolio_tracker_spark.io import (
-    read_prices_range, write_prices_partitioned,
-)
+from etl_portfolio_tracker_spark.io import read_prices_range, upsert_prices
 from etl_portfolio_tracker_spark.plans import partition_filters
 
 
@@ -27,7 +25,7 @@ def test_partitioned_prices_prune(spark, tmp_path):
             for y in range(3) for d in range(5)]
     prices = spark.createDataFrame(rows, schema=schemas.PRICES)
     path = str(tmp_path / "prices")
-    write_prices_partitioned(prices, path)
+    upsert_prices(spark, prices, path)
 
     scan = read_prices_range(spark, path, "2024-01-01", "2024-12-31")
     pf = _partition_filters(scan)

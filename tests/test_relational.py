@@ -65,16 +65,23 @@ def test_trades_list_order(spark):
     assert ids == [1, 2, 3]
 
 
-def test_idempotent_append(spark):
-    from etl_portfolio_tracker_spark.io import idempotent_append
-    p = spark.createDataFrame([("A", dt.date(2025, 1, 1), 10.0)], schema=schemas.PRICES)
-    batch = spark.createDataFrame(
-        [("A", dt.date(2025, 1, 1), 99.0),   # duplicate key → ignored
-         ("A", dt.date(2025, 1, 2), 11.0),
-         ("A", dt.date(2025, 1, 2), 11.5)],  # in-batch dup → min wins
-        schema=schemas.PRICES)
+def test_idempotent_append(spark, tmp_path):
+    from etl_portfolio_tracker_spark.jobs import run_price_etl
+    tgt = str(tmp_path / "prices")
+
+    def load(name, rows):
+        src = str(tmp_path / name)
+        spark.createDataFrame(rows, schema=schemas.PRICES) \
+            .coalesce(1).write.parquet(src)
+        run_price_etl(spark, src, tgt)
+
+    load("p", [("A", dt.date(2025, 1, 1), 10.0)])
+    load("batch",
+         [("A", dt.date(2025, 1, 1), 99.0),   # duplicate key → ignored
+          ("A", dt.date(2025, 1, 2), 11.0),
+          ("A", dt.date(2025, 1, 2), 11.5)])  # in-batch dup → min wins
     out = {(r["ticker"], r["ts"]): r["close"]
-           for r in idempotent_append(p, batch, ["ticker", "ts"]).collect()}
+           for r in spark.read.parquet(tgt).collect()}
     assert out == {("A", dt.date(2025, 1, 1)): 10.0,
                    ("A", dt.date(2025, 1, 2)): 11.0}
 

@@ -63,6 +63,26 @@ def test_idempotent_ingest_fails_on_unreadable_target(spark, tmpdir):
     assert os.listdir(tgt) == ["part-00000-corrupt.parquet"]
 
 
+def test_stream_sink_is_price_layout(spark, tmpdir):
+    # the stream sink is the batch ETL's layout: a range read over it
+    # prunes ts_year partitions and returns exactly its window's rows
+    from etl_portfolio_tracker_spark import io
+    from etl_portfolio_tracker_spark.plans import partition_filters
+    src, tgt, chk = f"{tmpdir}/src", f"{tmpdir}/tgt", f"{tmpdir}/chk"
+    rows = [("A", dt.datetime(2024, 12, 30, 12), 10.0),
+            ("A", dt.datetime(2025, 1, 2, 12), 11.0),
+            ("B", dt.datetime(2025, 1, 3, 12), 7.0)]
+    spark.createDataFrame(
+        rows, "ticker string, ts timestamp, close double"
+    ).coalesce(1).write.parquet(src)
+    q = ingest.write_idempotent(
+        ingest.dedup_stream(ingest.read_price_stream(spark, src)), tgt, chk)
+    q.awaitTermination(120)
+    scan = io.read_prices_range(spark, tgt, "2025-01-01", "2025-12-31")
+    assert any("ts_year" in f for f in partition_filters(scan))
+    assert sorted(tuple(r) for r in scan.collect()) == rows[1:]
+
+
 def test_streaming_tumbling_window(spark, tmpdir):
     src = f"{tmpdir}/ev"
     base = dt.datetime(2025, 1, 1, 10, 5, 0)

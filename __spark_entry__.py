@@ -525,7 +525,12 @@ def _prices_subset(spark, sf_dir):
 
 def _q_positions_salted(spark, sf_dir):
     """Skew-mitigation demo: salted two-phase aggregation must equal
-    the plain plan — reuses the `positions` oracle as proof."""
+    the plain plan — reuses the `positions` oracle as proof.
+
+    It reads the one-partition ledger memo (`derive.trades`), so both
+    aggregate phases run inside one task and the salt spreads
+    nothing: the rows still match the oracle, but the query no longer
+    shows skew salting at runtime (its plan prints 0 exchanges)."""
     from etl_portfolio_tracker_spark.functions.skew import salted_sum
     tr = derive.trades(spark, sf_dir)
     return (salted_sum(tr, ["user", "ticker"], R.signed_qty(), "qty")
@@ -989,7 +994,9 @@ def _curation_build(spark, sf_dir):
     """The shared curation frames, persisted and materialized.
 
     The build DAG is band_keys → {index write, cands, clusters} →
-    {verdict (needs clusters), verified (needs cands)}. A serial build
+    {verdict (needs clusters), scored (needs cands)}. `scored` is the
+    one verify_candidates frame both near-dup verifies filter
+    (`_verified`, `_q_tfidf_cosine_verified`). A serial build
     leaves most of the cluster idle during each stage's tail;
     materializing the independent stages from a small thread pool
     backfills executors with the next stage's tasks (the build runs
@@ -1043,14 +1050,14 @@ def _curation_build(spark, sf_dir):
                 lambda: kept(DD.dedup_clusters(
                     docs, band_keys=band_keys).persist()))
             fs.append(f_clusters)
-            # verified depends only on cands — construct and
+            # scored depends only on cands — construct and
             # materialize it WHILE the clusters CC loop still runs
             # (the construct itself runs the kernel's eager
             # checkpoint jobs, so it belongs in the pool too)
-            f_vframe = pool.submit(
-                lambda: kept(DD.minhash_verified(
+            f_scored = pool.submit(
+                lambda: kept(DD.verify_candidates(
                     docs, cands=cands).persist()))
-            fs.append(f_vframe)
+            fs.append(f_scored)
             fs.append(pool.submit(exact.count))
             fs.append(pool.submit(qual.count))
             clusters = f_clusters.result()
@@ -1058,8 +1065,8 @@ def _curation_build(spark, sf_dir):
             verdict = kept(DD.corpus_prune(docs, clusters=clusters,
                                            exact=exact, qual=qual).persist())
             fs.append(pool.submit(verdict.count))
-            verified = f_vframe.result()
-            fs.append(pool.submit(verified.count))
+            scored = f_scored.result()
+            fs.append(pool.submit(scored.count))
             for f in fs:
                 f.result()  # propagate any build failure loudly
         # verdict is persisted; the stage frames it read are no
@@ -1080,7 +1087,12 @@ def _curation_build(spark, sf_dir):
         raise
     return {"band_keys": band_keys, "cands": cands,
             "clusters": clusters, "verdict": verdict,
-            "verified": verified, "index_path": idx_path}
+            "scored": scored, "index_path": idx_path}
+
+
+def _verified(spark, sf_dir):
+    """minhash_verified's pairs, read off the build's scored frame."""
+    return DD.jaccard_rows(_curation(spark, sf_dir)["scored"])
 
 
 def _curation_reset(spark):
@@ -1120,7 +1132,7 @@ def _q_contamination_check(spark, sf_dir):
 
 
 def _q_minhash_verified(spark, sf_dir):
-    return _curation(spark, sf_dir)["verified"]
+    return _verified(spark, sf_dir)
 
 
 def _q_holt_winters(spark, sf_dir):
@@ -1191,9 +1203,8 @@ def _q_tfidf_cosine_verified(spark, sf_dir):
     """IDF-weighted cosine near-dup pairs on the shared LSH
     candidates — the cosine half of the weighted-similarity family
     (weighted_jaccard_pairs is the Jaccard half); exact integer
-    squared-compare at tau=0.7."""
-    return DD.tfidf_cosine_verified(
-        _docs(spark, sf_dir), cands=_curation(spark, sf_dir)["cands"])
+    squared-compare at tau=0.7, read off the build's scored frame."""
+    return DD.cosine_rows(_curation(spark, sf_dir)["scored"])
 
 
 def _q_leakage_safe_split(spark, sf_dir):
@@ -1649,7 +1660,7 @@ def _q_incremental_topk(spark, sf_dir):
 def _q_near_dup_edit_stats(spark, sf_dir):
     return DD.near_dup_edit_stats(
         _docs(spark, sf_dir),
-        pairs=_curation(spark, sf_dir)["verified"])
+        pairs=_verified(spark, sf_dir))
 
 
 def _q_length_bucket_batches(spark, sf_dir):
@@ -1659,7 +1670,7 @@ def _q_length_bucket_batches(spark, sf_dir):
 def _q_dedup_threshold_sweep(spark, sf_dir):
     return DD.dedup_threshold_sweep(
         _docs(spark, sf_dir),
-        pairs=_curation(spark, sf_dir)["verified"])
+        pairs=_verified(spark, sf_dir))
 
 
 def _q_doc_containment(spark, sf_dir):
@@ -1785,7 +1796,7 @@ def _q_ngram_novelty(spark, sf_dir):
 def _q_rouge_overlap_pairs(spark, sf_dir):
     return DD.rouge_overlap_pairs(
         _docs(spark, sf_dir),
-        pairs=_curation(spark, sf_dir)["verified"])
+        pairs=_verified(spark, sf_dir))
 
 
 def _q_sales_cube_gid(spark, sf_dir):
@@ -1920,7 +1931,7 @@ def _q_mmr_topk(spark, sf_dir):
 def _q_minhash_estimate_error(spark, sf_dir):
     return DD.minhash_estimate_error(
         _docs(spark, sf_dir),
-        pairs=_curation(spark, sf_dir)["verified"])
+        pairs=_verified(spark, sf_dir))
 
 
 def _q_kfold_leakage_report(spark, sf_dir):

@@ -492,161 +492,237 @@ def minhash_lsh_candidates(docs: DataFrame,
             .agg(F.count("*").alias("n_bands")))
 
 
+COS_W_SCALE = 10_000  # idf quantized at 1e-4 then scaled to int —
+#                       coarser than the Jaccard join's 1e-10 because
+#                       the cosine compare SQUARES dot products: w²,
+#                       dot ~ n_sh·w², and dot² must stay inside
+#                       DECIMAL(38,0) (bounds in verify_candidates)
+TFIDF_COS_TAU_NUM, TFIDF_COS_TAU_DEN = 7, 10
+
+
+def verify_candidates(docs: DataFrame,
+                      cands: DataFrame | None = None,
+                      threshold: float = JACCARD_THRESHOLD,
+                      tau_num: int = TFIDF_COS_TAU_NUM,
+                      tau_den: int = TFIDF_COS_TAU_DEN,
+                      weighted: bool = True) -> DataFrame:
+    """The candidate-verify kernel of the near-dup family: every
+    MinHash-LSH candidate pair scored ONCE for both exact verifies —
+    shingle-set Jaccard and idf²-weighted cosine. Returns
+    (doc_a, doc_b, n_common, jaccard, w_cosine) over the pairs that
+    pass either prune; `n_common`/`jaccard` are NULL where the
+    size-ratio prune failed, `w_cosine` is NULL unless cos ≥ τ. The
+    verifies are filters of this frame (minhash_verified,
+    tfidf_cosine_verified), so a session that persists it (the
+    curation build) answers both with one job each.
+
+    `weighted=False` scores Jaccard only (`w_cosine` is all NULL): the
+    idf needs every document's shingles, but the Jaccard sets need
+    only the candidates', so the unweighted call aggregates the
+    candidate-restricted shingle stream (a left-semi join before the
+    shuffle) and skips the weights. Standalone minhash_verified, and
+    through it curation_serve and the pair reports called without
+    precomputed pairs, take that path: on the whole-corpus stream they
+    ran 5–63 % slower warm at sf0.1 (4 cores).
+
+    Shape — one pass of each stage, shared by both scores:
+    1. the candidates are materialized once: they feed the endpoint
+       broadcast and the pair join. They are spread over
+       defaultParallelism partitions, because AQE coalesces the small
+       pair frame to 1-2 partitions and the per-pair array tail is
+       CPU-bound per row, not per byte;
+    2. ONE per-shingle aggregate over the distinct (doc, shingle)
+       stream carries the document frequency `_df` (the idf needs the
+       whole corpus) and the candidate posting list: membership
+       attaches map-side from a broadcast of the distinct candidate
+       endpoints, and collect_list skips the NULLs of non-candidates.
+       It is materialized once, weighted, for the arrays and guards;
+    3. ONE per-doc aggregate over the exploded postings, repartitioned
+       wide by doc (set building is CPU-bound per byte, which AQE's
+       byte-based coalescing would pin to 1-2 reducers), builds ONE
+       set per doc: the packed long (hash44 << 20) | w plus Σw², or
+       xxhash64(shingle) when unweighted. The packed set serves both
+       scores: under the pack guard, distinct shingles pack to
+       distinct longs, so its sizes and intersections are the
+       shingle sets'. One array moves per pair side, and one
+       intersect yields both n_common and the dot.
+
+    Hashed sets are exact, not probabilistic: two 1-row injectivity
+    guards assert count(hash) == count(distinct hash) over the
+    dictionary. The pack guard runs over the whole vocabulary (the
+    pack is a function of the dictionary alone) and makes the packed
+    sets exact; the xxhash64 guard runs over the candidate vocabulary
+    (the shingles of candidate docs, i.e. every set the verify
+    touches) and makes the unweighted sets exact. The weighted call
+    keeps it too, so the Jaccard verify still fails on any candidate
+    collision; the unweighted call has no pack, so its pack guard
+    holds trivially. A collision fails the job LOUDLY (the message
+    says to salt the hash); it can never emit or suppress a row.
+    Both guards ride the candidate frame BEFORE either prune: sizes
+    and norms come from the hashed sets, so a collision that shrank a
+    set could prune a true pair before any output row existed to
+    evaluate a post-prune assert. An empty candidate frame needs no
+    guard (collisions cannot create LSH candidates; they only affect
+    the verify arithmetic).
+
+    Prunes, on a NARROW (doc, n, n2) frame joined to the pairs before
+    any array moves (the PPJoin size-filter algebra; results are
+    bit-identical, so the DuckDB oracles need no mirror):
+    - Jaccard: n_common ≤ min(|a|,|b|), so jaccard ≤ min/max. The bound
+      uses the SAME division form as the final filter (at
+      n_common == min the final expression is literally min/max), so
+      the two floats round identically for any threshold;
+    - cosine: cos ≤ √(min/max) on the squared norms, compared as the
+      integer min·τ_den² ≥ max·τ_num². It is far looser (τ² = 0.49).
+    The survivors of either prune join each side's array ONCE; the
+    intersection is array_intersect on BIGINT arrays, which runs the
+    specialized codegen path, where struct arrays fall back to
+    interpreted comparisons (measured 32×, SCALING.md). Each score is
+    computed only where its own prune passed.
+
+    Cosine exactness: idf is quantized HALF_UP at 1e-4 and scaled to
+    BIGINT (w ≤ 2.8·10⁵ for any corpus ≤ 10¹² docs, and w < 2²⁰ for
+    any corpus under e^104 docs, so the pack cannot overflow a signed
+    64-bit), so dot and the squared norms are exact longs and the τ
+    filter is the RATIONAL squared compare
+    (dot·τ_den)² ≥ (τ_num²·|A|²)·|B|² in DECIMAL(38,0) — exact for docs
+    up to ~10⁶ shingles (dot·τ_den ≤ ~10¹⁷, its square ≤ 10³⁴ < 10³⁸);
+    positive weights make both sides nonnegative, so squaring
+    preserves the inequality. The emitted cosine is
+    dot/√(|A|²·|B|²), rounded to 6 places: sqrt is IEEE-754 correctly
+    rounded in both engines, so no decimal laundering is needed.
+    """
+    from ..functions.partitioning import spread
+    cands = spread(iter_checkpoint(
+        (minhash_lsh_candidates(docs) if cands is None else cands)
+        .select("doc_a", "doc_b"), eager=True), "doc_a")
+    cand_ids = (cands.select(F.col("doc_a").alias("doc_id"))
+                .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
+                .distinct())
+    if weighted:
+        per_sh = (shingles(docs)
+                  .join(F.broadcast(cand_ids.withColumn("_c", F.lit(1))),
+                        "doc_id", "left")
+                  .groupBy("shingle")
+                  .agg(F.count(F.lit(1)).alias("_df"),
+                       F.collect_list(F.when(F.col("_c") == 1,
+                                             F.col("doc_id")))
+                        .alias("_docs")))
+        nd = docs.agg(F.count(F.lit(1)).alias("_nd"))
+        w = (F.log((F.col("_nd") + 1).cast("double")
+                   / F.col("_df").cast("double"))
+             .cast("decimal(8,4)") * COS_W_SCALE).cast("bigint")
+        wts = per_sh.crossJoin(F.broadcast(nd)).select("shingle", "_docs",
+                                                        w.alias("_w"))
+    else:
+        wts = (shingles(docs, distinct=False)
+               .join(F.broadcast(cand_ids), "doc_id", "left_semi")
+               .groupBy("shingle")
+               .agg(F.collect_set("doc_id").alias("_docs"))
+               .withColumn("_w", F.lit(None).cast("bigint")))
+    # materialized once: the arrays and the guards read it
+    wts = iter_checkpoint(wts, eager=True)
+    h = F.xxhash64("shingle")
+    packed = (F.shiftright(h, 20) * F.lit(1 << 20)
+              + F.col("_w")).cast("bigint")
+    n = docs.sparkSession.sparkContext.defaultParallelism
+    arrs = iter_checkpoint(
+        wts.select(F.explode("_docs").alias("doc_id"),
+                   (packed if weighted else h).alias("_e"), "_w")
+           .repartition(n, "doc_id")
+           .groupBy("doc_id")
+           .agg(F.collect_set("_e").alias("_s"),
+                F.sum(F.col("_w") * F.col("_w")).alias("_n2")),
+        eager=True)
+    in_cands = F.size("_docs") > 0
+    inj = wts.agg(F.count(F.when(in_cands, h)).alias("_ns_c"),
+                  F.countDistinct(F.when(in_cands, h)).alias("_nh_c"),
+                  F.count(packed).alias("_ns"),
+                  F.countDistinct(packed).alias("_nh"))
+    inj_ok = (F.assert_true(
+        F.col("_ns_c") == F.col("_nh_c"),
+        F.lit("minhash_verified: xxhash64 collision among candidate "
+              "shingles — salt the hash (add a literal column) and "
+              "re-run")).isNull()
+        & F.assert_true(
+        F.col("_ns") == F.col("_nh"),
+        F.lit("tfidf_cosine_verified: 44-bit same-weight collision "
+              "among candidate shingles — salt the hash and re-run"))
+        .isNull())
+    side = arrs.select("doc_id", F.size("_s").alias("_n"), "_n2")
+    jac_ok = (F.least("_na", "_nb").cast("double")
+              / F.greatest("_na", "_nb") >= F.lit(float(threshold)))
+    cos_ok = (F.least("_na2", "_nb2") * (tau_den * tau_den)
+              >= F.greatest("_na2", "_nb2") * (tau_num * tau_num))
+    surv = (cands
+            .crossJoin(F.broadcast(inj))
+            .filter(inj_ok)
+            .join(side.select(F.col("doc_id").alias("doc_a"),
+                              F.col("_n").alias("_na"),
+                              F.col("_n2").alias("_na2")), "doc_a")
+            .join(side.select(F.col("doc_id").alias("doc_b"),
+                              F.col("_n").alias("_nb"),
+                              F.col("_n2").alias("_nb2")), "doc_b")
+            .select("doc_a", "doc_b", "_na", "_nb", "_na2", "_nb2",
+                    jac_ok.alias("_jok"), cos_ok.alias("_cok"))
+            .filter(F.col("_jok") | F.col("_cok")))
+    m20 = F.lit((1 << 20) - 1)
+    dot = F.aggregate(
+        "_i", F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x.bitwiseAND(m20) * x.bitwiseAND(m20))
+    # the intersect in its own projection: referencing it from both
+    # scores would re-evaluate the O(|a|+|b|) intersect per reference
+    scored = (surv
+              .join(arrs.select(F.col("doc_id").alias("doc_a"),
+                                F.col("_s").alias("_sa")), "doc_a")
+              .join(arrs.select(F.col("doc_id").alias("doc_b"),
+                                F.col("_s").alias("_sb")), "doc_b")
+              .select("doc_a", "doc_b", "_na2", "_nb2", "_jok", "_cok",
+                      (F.col("_na") + F.col("_nb")).alias("_tot"),
+                      F.array_intersect("_sa", "_sb").alias("_i"))
+              .select("doc_a", "doc_b", "_na2", "_nb2", "_tot",
+                      F.when(F.col("_jok"), F.size("_i").cast("bigint"))
+                       .alias("n_common"),
+                      F.when(F.col("_cok"), dot).alias("_dot")))
+    lhs = ((F.col("_dot") * tau_den).cast("decimal(19,0)")
+           * (F.col("_dot") * tau_den))
+    rhs = ((F.col("_na2") * (tau_num * tau_num)).cast("decimal(19,0)")
+           * F.col("_nb2"))
+    cos = F.round(F.col("_dot").cast("double")
+                  / F.sqrt(F.col("_na2").cast("double")
+                           * F.col("_nb2").cast("double")), 6)
+    return scored.select(
+        "doc_a", "doc_b", "n_common",
+        (F.col("n_common").cast("double")
+         / (F.col("_tot") - F.col("n_common"))).alias("jaccard"),
+        F.when(lhs >= rhs, cos).alias("w_cosine"))
+
+
+def jaccard_rows(scored: DataFrame,
+                 threshold: float = JACCARD_THRESHOLD) -> DataFrame:
+    """minhash_verified's rows of a verify_candidates frame scored at
+    `threshold`."""
+    return (scored.filter(F.col("jaccard") >= threshold)
+            .select("doc_a", "doc_b", "n_common", "jaccard"))
+
+
+def cosine_rows(scored: DataFrame) -> DataFrame:
+    """tfidf_cosine_verified's rows of a verify_candidates frame."""
+    return (scored.filter(F.col("w_cosine").isNotNull())
+            .select("doc_a", "doc_b", "w_cosine"))
+
+
 def minhash_verified(docs: DataFrame,
                      threshold: float = JACCARD_THRESHOLD,
                      cands: DataFrame | None = None) -> DataFrame:
     """The full text near-dup pipeline: MinHash-LSH candidates → exact
     shingle-Jaccard computed ONLY on candidate pairs → keep pairs ≥
-    `threshold`. The text twin of embedding_near_dup_verified
-    (similarity.py); this is the composition every docstring in this
-    module promises, as one operator.
-
-    Scale shape: the exact intersection is computed IN-ROW over
-    per-doc arrays of 8-byte shingle hashes, not by re-exploding
-    shingles per pair: at this operator's τ = 0.5 the size-ratio
-    prune still passes ~20k of the 410k sf0.1 candidates, so the
-    survivors-only pair-explode kernel (adopted r8 by the τ = 0.7
-    prefix/weighted/cosine family, where survivors are few) ships
-    ~8M string rows through a shuffle join — measured 9-11 s vs
-    2.5 s warm for the array form on the identical survivor set
-    (r8 A/B; the array sets ship ONCE, and array_intersect on
-    sorted-unique BIGINTs is O(|a|+|b|) codegen per pair). xxhash64
-    stands in for the shingle string, and since r8 that substitution
-    is DETERMINISTICALLY safe rather than probabilistic (VERDICT r7
-    item 4 resolved without the wall-time regression): a 1-row
-    in-job guard asserts count(distinct shingle) ==
-    count(distinct xxhash64(shingle)) over the candidate-restricted
-    stream — injectivity on every set the verify touches — so a
-    64-bit collision can only fail the job LOUDLY (message says to
-    salt the hash), never emit OR SUPPRESS a wrong row: since r9 the
-    guard is evaluated on the candidate frame BEFORE the size-ratio
-    prune (ADVICE r8 — a collision shrinks hashed-set sizes, so a
-    post-prune guard could let a true pair be pruned with no output
-    row left to evaluate the assert), and an empty candidate frame
-    needs no guard because collisions cannot create LSH candidates.
-    Candidates sharing zero shingles yield n_common = 0 → filtered
-    by any useful threshold."""
-    # one materialization of the LSH pipeline: candidates feed the id
-    # restriction AND the pair join — without the checkpoint the whole
-    # minhash stage recomputes per consumer (cluster: persist()).
-    cands = iter_checkpoint(
-        (minhash_lsh_candidates(docs) if cands is None else cands)
-        .select("doc_a", "doc_b"), eager=True)
-    # r9-opt (guide §2.5 — CPU-bound stages vs byte-based coalescing):
-    # the candidate aggregate is only ~6 MB at sf0.1, so AQE coalesces
-    # it to 1-2 partitions — and every downstream stage that inherits
-    # that partitioning (the size-ratio prune join and, decisively,
-    # the per-pair array_intersect tail, whose cost is per-ROW not
-    # per-byte) ran on 1-2 cores (measured: verify tail 6.6 s at 0.89
-    # host idle). spread() restores defaultParallelism partitions
-    # locally and is a no-op on a real cluster where the pair frame
-    # already arrives wide. Measured serve-path verify 6.6 s → (see
-    # OPTIMIZATION_r09.md).
-    from ..functions.partitioning import spread
-    cands = spread(cands, "doc_a")
-    cand_ids = (cands.select(F.col("doc_a").alias("doc_id"))
-                .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
-                .distinct())
-    # r10-opt (guide §2.3/§2.4, the tfidf_cosine_verified pattern):
-    # ONE per-shingle aggregate over the candidate-restricted stream
-    # replaces the old sh_r checkpoint (1.2M-row string frame
-    # materialized once then shuffled AGAIN for the vocabulary
-    # distinct) — the aggregate's keys ARE the restricted vocabulary,
-    # so the injectivity guard rides it for free, and the per-doc
-    # hash sets are rebuilt by exploding the (bounded, candidate-only)
-    # posting lists. Candidate membership attaches map-side from a
-    # broadcast of the distinct endpoints (bounded by the LSH band
-    # bucket caps). Sets are order-insensitive → bit-identical output.
-    per_sh = iter_checkpoint(
-        shingles(docs, distinct=False)
-        .join(F.broadcast(cand_ids), "doc_id", "left_semi")
-        .groupBy("shingle")
-        .agg(F.collect_set("doc_id").alias("_docs")),
-        eager=True)
-    # explicit-N co-partition (same rule as minhash_lsh_candidates):
-    # the exploded posting stream is small in bytes, which AQE
-    # coalesces to 1-2 reducers — but hash-SET building is CPU-bound
-    # per byte, so pin the doc partitioning wide.
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    arrs = iter_checkpoint(
-        per_sh.select(F.xxhash64("shingle").alias("_h"),
-                      F.explode("_docs").alias("doc_id"))
-              .repartition(n, "doc_id")
-              .groupBy("doc_id")
-              .agg(F.collect_set("_h").alias("_sh")),
-        # materialized once: sizes AND arrays both consume it
-        eager=True)
-    # injectivity guard (1 row, broadcast): equal distinct counts over
-    # the restricted VOCABULARY ⇒ hash Jaccard == string Jaccard
-    # EXACTLY — per_sh's keys are exactly the old vocab distinct.
-    inj = per_sh.agg(
-        F.count(F.lit(1)).alias("_ns"),
-        F.countDistinct(F.xxhash64("shingle")).alias("_nh"))
-    inj_ok = F.assert_true(
-        F.col("_ns") == F.col("_nh"),
-        F.lit("minhash_verified: xxhash64 collision among candidate "
-              "shingles — salt the hash (add a literal column) and "
-              "re-run"))
-    # Size-ratio prune (exact): n_common ≤ min(|a|,|b|), so
-    # jaccard ≤ min/max — a pair with min/max < t can never reach the
-    # threshold. The bound is evaluated with the SAME division form as
-    # the final jaccard filter (at the boundary n_common == min the
-    # final expression is literally min/max), so the two floats round
-    # identically for ANY threshold — a multiply-form bound
-    # (min >= t*max) could disagree with the divide-form filter at the
-    # boundary for non-representable thresholds.
-    # The prune runs on a NARROW (doc_id, n) frame joined
-    # to the pair list BEFORE any array moves: at sf0.1 it discards
-    # ~95% of the 410k candidates shipping two ints per pair, so the
-    # two array joins (the heavy movement — ~200 bigints per side)
-    # only ever see the surviving pairs. Same algebra as the
-    # prefix-filtering rule in set-similarity joins (PPJoin); results
-    # are bit-identical, so the DuckDB oracle needs no mirror (its
-    # planner re-derives the same output from the unpruned
-    # formulation).
-    sizes = arrs.select("doc_id", F.size("_sh").alias("_n"))
-    # the guard rides the CANDIDATE frame, before the size-ratio prune
-    # (ADVICE r8): sizes are computed from the HASHED sets, so a
-    # collision that shrank one doc's set size could prune a true pair
-    # before any output row exists to evaluate a post-prune assert —
-    # evaluated here, every candidate row checks it first (and an
-    # empty candidate frame needs no guard: collisions cannot create
-    # LSH candidates, they only affect the verify arithmetic).
-    survivors = (cands
-                 .crossJoin(F.broadcast(inj))
-                 .filter(inj_ok.isNull())
-                 .join(sizes.select(F.col("doc_id").alias("doc_a"),
-                                    F.col("_n").alias("_na")), "doc_a")
-                 .join(sizes.select(F.col("doc_id").alias("doc_b"),
-                                    F.col("_n").alias("_nb")), "doc_b")
-                 .filter(F.least("_na", "_nb").cast("double")
-                         / F.greatest("_na", "_nb")
-                         >= F.lit(float(threshold))))
-    va = arrs.select(F.col("doc_id").alias("doc_a"),
-                     F.col("_sh").alias("_sa"))
-    vb = arrs.select(F.col("doc_id").alias("doc_b"),
-                     F.col("_sh").alias("_sb"))
-    # n_common materialized in its own projection: referencing the
-    # intersect expression from the jaccard formula AND the filter
-    # would re-evaluate the O(|a|+|b|) intersect per reference.
-    with_common = (survivors.join(va, "doc_a").join(vb, "doc_b")
-                   .select("doc_a", "doc_b",
-                           F.size(F.array_intersect("_sa", "_sb"))
-                            .cast("bigint").alias("n_common"),
-                           (F.col("_na") + F.col("_nb")).alias("_tot")))
-    return (with_common
-            .select("doc_a", "doc_b", "n_common",
-                    (F.col("n_common").cast("double")
-                     / (F.col("_tot") - F.col("n_common"))).alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold))
-
-
-COS_W_SCALE = 10_000  # idf quantized at 1e-4 then scaled to int —
-#                       coarser than the Jaccard join's 1e-10 because
-#                       the cosine compare SQUARES dot products: w²,
-#                       dot ~ n_sh·w², and dot² must stay inside
-#                       DECIMAL(38,0) (bounds in the docstring below)
-TFIDF_COS_TAU_NUM, TFIDF_COS_TAU_DEN = 7, 10
+    `threshold` (the text twin of embedding_near_dup_verified,
+    similarity.py). Candidates sharing zero shingles yield
+    n_common = 0 → filtered by any useful threshold. Scored by
+    verify_candidates."""
+    return jaccard_rows(verify_candidates(docs, cands, threshold,
+                                          weighted=False), threshold)
 
 
 def tfidf_cosine_verified(docs: DataFrame,
@@ -655,152 +731,15 @@ def tfidf_cosine_verified(docs: DataFrame,
                           cands: DataFrame | None = None) -> DataFrame:
     """IDF-weighted COSINE near-dup pairs on LSH candidates — the
     cosine half of the weighted-similarity family
-    (weighted_jaccard_pairs is the Jaccard half): MinHash-LSH
-    candidate generation (shared with the curation pipeline), then an
-    EXACT idf²-weighted cosine over each candidate's shingle set,
-    kept at cos ≥ τ. For binary idf-weighted vectors
+    (weighted_jaccard_pairs is the Jaccard half): an EXACT
+    idf²-weighted cosine over each candidate's shingle set, kept at
+    cos ≥ τ = tau_num/tau_den. For binary idf-weighted vectors
     dot(A,B) = Σ_{t∈A∩B} w(t)² and |A|² = Σ_{t∈A} w(t)², so rare
     shared shingles dominate the score — the retrieval-style
-    complement of set-overlap Jaccard.
-
-    Exactness: idf is quantized HALF_UP at 1e-4 and scaled to BIGINT
-    (w ≤ 2.8·10⁵ for any corpus ≤ 10¹² docs), so dot and the squared
-    norms are exact longs and the τ filter is the RATIONAL squared
-    compare (dot·τ_den)² ≥ (τ_num²·|A|²)·|B|² evaluated in
-    DECIMAL(38,0) — exact for docs up to ~10⁶ shingles (dot·τ_den ≤
-    ~10¹⁷, its square ≤ 10³⁴ < 10³⁸); positive weights make both
-    sides nonnegative so squaring preserves the inequality. The
-    emitted cosine is dot/√(|A|²·|B|²) — ONE double multiply + sqrt +
-    divide; sqrt is IEEE-754 correctly rounded in BOTH engines
-    (unlike ln/exp), so no decimal laundering is needed.
-
-    Scale shape: banded-LSH candidates bound the pair set, the
-    norm-ratio prune (cos ≤ √(min/max) on |·|² — integer compare
-    min·τ_den² ≥ max·τ_num²) discards pairs on a NARROW (doc_id, n2)
-    frame before any array moves, and the exact dot folds over
-    intersected PACKED-LONG arrays: each element is
-    (hash44 << 20) | w — the 44 high bits of xxhash64(shingle) and
-    the 20-bit weight (w < 2²⁰ for any corpus under e^104 docs;
-    hash44 magnitude < 2⁴³ so the pack can't overflow a signed
-    64-bit) — because array_intersect on BIGINT arrays runs the
-    specialized codegen path while struct arrays fall back to
-    interpreted comparisons (measured 32×: 52 s → 1.6 s, SCALING.md).
-    The r8 pair-explode variant (the weighted_jaccard_pairs kernel)
-    was MEASURED SLOWER HERE and reverted: the cosine norm-ratio
-    bound is τ² = 0.49 — far looser than Jaccard's min/max ≥ 0.7 —
-    so enough survivors reach the verify that exploding their
-    weighted shingle rows cost 17.6 s vs ~5 s for shipping each
-    doc's packed array once (canonical bench, sf0.1).
-
-    Since r8 the pack is DETERMINISTICALLY safe rather than
-    probabilistic (ADVICE r7 item 1 resolved without the explode
-    regression): a 1-row in-job guard asserts
-    count(distinct shingle) == count(distinct packed) over the
-    candidate-restricted weighted stream — injectivity of
-    shingle → (hash44 << 20 | w) on every set the verify touches —
-    so a 44-bit same-weight collision can only fail the job LOUDLY
-    (message says to salt the hash), never merge two shingles
-    silently. Collisions merge elements (raise cosine, shrink
-    norms), so an output row that would need the guard always
-    coexists with a firing guard.
-    """
-    cands = iter_checkpoint(
-        (minhash_lsh_candidates(docs) if cands is None else cands)
-        .select("doc_a", "doc_b"), eager=True)
-    # r9-opt: same AQE-coalescing fix as minhash_verified — the pair
-    # frame's per-row tail must not inherit a 1-2 partition layout.
-    from ..functions.partitioning import spread
-    cands = spread(cands, "doc_a")
-    cand_ids = (cands.select(F.col("doc_a").alias("doc_id"))
-                .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
-                .distinct())
-    sh = shingles(docs)
-    nd = docs.agg(F.count(F.lit(1)).alias("_nd"))
-    # r10-opt (guide §2.3/§2.4 — shuffle the stream once, drop the
-    # vocab re-join): the r9 kernel shuffled the distinct
-    # (doc, shingle) stream TWICE by the shingle string — once for
-    # the df-count groupBy and once more through the sh⋈wts join —
-    # and its lazy checkpoints re-ran those stages per consumer
-    # inside the one action (first-call decomposition: arrs alone
-    # 4.9 s, full first call 13.8 s at sf0.1). ONE per-shingle
-    # aggregate now computes the document frequency AND carries the
-    # candidate posting list; candidate membership attaches map-side
-    # from a broadcast of the distinct candidate endpoints (bounded
-    # by the LSH band bucket caps — the same O(pairs) frame every
-    # verify tail already materializes). collect_list skips NULLs,
-    # so only candidate docs enter posting lists; exploding them and
-    # re-aggregating per doc rebuilds exactly the old per-doc packed
-    # sets (sets are order-insensitive, Σw² is over the same distinct
-    # shingles). Checkpoints are EAGER: per_sh feeds wts/inj/arrs.
-    per_sh = iter_checkpoint(
-        sh.join(F.broadcast(cand_ids.withColumn("_c", F.lit(1))),
-                "doc_id", "left")
-          .groupBy("shingle")
-          .agg(F.count(F.lit(1)).alias("_df"),
-               F.collect_list(F.when(F.col("_c") == 1, F.col("doc_id")))
-                .alias("_docs")),
-        eager=True)
-    wts = (per_sh.crossJoin(F.broadcast(nd))
-           .select("shingle", "_docs",
-                   (F.log((F.col("_nd") + 1).cast("double")
-                          / F.col("_df").cast("double"))
-                    .cast("decimal(8,4)") * COS_W_SCALE)
-                   .cast("bigint").alias("_w")))
-    n = docs.sparkSession.sparkContext.defaultParallelism
-    packed = (F.shiftright(F.xxhash64("shingle"), 20) * F.lit(1 << 20)
-              + F.col("_w"))
-    arrs = iter_checkpoint(
-        wts.select(F.explode("_docs").alias("doc_id"),
-                   packed.cast("bigint").alias("_pk"), "_w")
-           .repartition(n, "doc_id")
-           .groupBy("doc_id")
-           .agg(F.collect_set("_pk").alias("_sw"),
-                F.sum(F.col("_w") * F.col("_w")).alias("_n2")),
-        eager=True)
-    # injectivity guard (1 row, broadcast): shingle → (hash44|w) is a
-    # function of the DICTIONARY alone, so the check runs over wts
-    # (one row per distinct shingle — vocab-sized, never the doc
-    # stream): count(*) == count(distinct packed) ⇒ the mapping is
-    # injective on the whole vocabulary, hence on every verified set,
-    # and the packed-array dot equals the string-exact dot EXACTLY
-    inj = wts.agg(F.count(F.lit(1)).alias("_ns"),
-                  F.countDistinct(packed).alias("_nh"))
-    inj_ok = F.assert_true(
-        F.col("_ns") == F.col("_nh"),
-        F.lit("tfidf_cosine_verified: 44-bit same-weight collision "
-              "among candidate shingles — salt the hash and re-run"))
-    surv = (cands
-            .join(arrs.select(F.col("doc_id").alias("doc_a"),
-                              F.col("_n2").alias("_na2")), "doc_a")
-            .join(arrs.select(F.col("doc_id").alias("doc_b"),
-                              F.col("_n2").alias("_nb2")), "doc_b")
-            .filter(F.least("_na2", "_nb2") * (tau_den * tau_den)
-                    >= F.greatest("_na2", "_nb2") * (tau_num * tau_num)))
-    va = arrs.select(F.col("doc_id").alias("doc_a"),
-                     F.col("_sw").alias("_sa"))
-    vb = arrs.select(F.col("doc_id").alias("doc_b"),
-                     F.col("_sw").alias("_sb"))
-    m20 = F.lit((1 << 20) - 1)
-    dot = F.aggregate(
-        F.array_intersect("_sa", "_sb"),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x.bitwiseAND(m20) * x.bitwiseAND(m20))
-    scored = (surv.join(va, "doc_a").join(vb, "doc_b")
-              .crossJoin(F.broadcast(inj))
-              .filter(inj_ok.isNull())
-              .select("doc_a", "doc_b", "_na2", "_nb2",
-                      dot.alias("_dot")))
-    lhs = ((F.col("_dot") * tau_den).cast("decimal(19,0)")
-           * (F.col("_dot") * tau_den))
-    rhs = ((F.col("_na2") * (tau_num * tau_num)).cast("decimal(19,0)")
-           * F.col("_nb2"))
-    return (scored
-            .filter(lhs >= rhs)
-            .select("doc_a", "doc_b",
-                    F.round(F.col("_dot").cast("double")
-                            / F.sqrt(F.col("_na2").cast("double")
-                                     * F.col("_nb2").cast("double")),
-                            6).alias("w_cosine")))
+    complement of set-overlap Jaccard. Scored by verify_candidates
+    (its docstring has the exactness bounds)."""
+    return cosine_rows(verify_candidates(docs, cands, tau_num=tau_num,
+                                         tau_den=tau_den))
 
 
 def min_label_components(labels: DataFrame, edges: DataFrame,

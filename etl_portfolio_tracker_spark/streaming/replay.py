@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,6 +50,14 @@ STATE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8"))
 # STATE_PARTITIONS; env-overridable.
 JOIN_STATE_PARTITIONS = int(os.environ.get(
     "SPARK_GRAFT_JOIN_STATE_PARTITIONS", "4"))
+
+
+# Serializes the window in which _run_to_completion holds the shared
+# session's shuffle-partition conf: two replays started from two
+# threads would otherwise interleave their set/restore pairs, run one
+# query at the other's state partition count and leave the session at
+# a replay's value instead of the caller's.
+_CONF_LOCK = threading.Lock()
 
 
 _INTERVAL_UNIT_S = {"second": 1, "seconds": 1, "minute": 60,
@@ -107,23 +116,29 @@ def _run_to_completion(writer, name: str, timeout_s: int,
     correctness gate must never produce).
 
     The session's shuffle-partition conf is pinned to STATE_PARTITIONS
-    for the duration of the start (a streaming query's state
+    for the duration of the query (a streaming query's state
     partitioning is fixed from the session conf at start time) and
-    restored after — batch queries keep their own setting."""
-    spark = SparkSession.getActiveSession()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(state_partitions or STATE_PARTITIONS))
-    try:
-        # start() is async — micro-batch planning reads the conf after
-        # it returns, so the restore must wait for termination.
-        q = writer.start()
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(
-                f"streaming replay {name!r} did not finish in {timeout_s}s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    restored after — batch queries keep their own setting. The conf
+    is shared by every thread of the session, so replays hold
+    `_CONF_LOCK` from the set to the restore and run one at a time.
+    The session is the writer's own: `SparkSession.getActiveSession()`
+    is None in a thread that did not create the session."""
+    spark = writer._spark
+    with _CONF_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions",
+                       str(state_partitions or STATE_PARTITIONS))
+        try:
+            # start() is async — micro-batch planning reads the conf
+            # after it returns, so the restore must wait for
+            # termination.
+            q = writer.start()
+            if not q.awaitTermination(timeout_s):
+                q.stop()
+                raise TimeoutError(f"streaming replay {name!r} did not "
+                                   f"finish in {timeout_s}s")
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def streaming_fold_replay(spark: SparkSession, sf_dir: str,

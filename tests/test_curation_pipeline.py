@@ -71,3 +71,12 @@ def test_registry_state_memoized_and_reset(spark, sf_dir):
     E._curation_reset(spark)
     assert not any(f.is_cached for f in frames)
     assert E._curation(spark, sf_dir) is not st
+
+
+def test_registry_verifies_match_standalone_kernels(spark, sf_dir, docs):
+    # the build scores the candidates once; its Jaccard and cosine
+    # filters equal the standalone kernels
+    import __spark_entry__ as E
+    assert _rows(E._verified(spark, sf_dir)) == _rows(DD.minhash_verified(docs))
+    assert (_rows(E.queries()["tfidf_cosine_verified"](spark, sf_dir))
+            == _rows(DD.tfidf_cosine_verified(docs)))

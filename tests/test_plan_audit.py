@@ -834,6 +834,20 @@ def test_trades_memo_shared_and_built_once(spark, private_sf):
     assert derive.trades(spark, sf).rdd.getNumPartitions() == 1
 
 
+# --- one verify kernel: both near-dup verifies read the curation build --------
+
+@pytest.mark.parametrize("name", ("minhash_verified", "tfidf_cosine_verified"))
+def test_warm_verify_consumer_runs_one_job(spark, name):
+    # the build persists one verify_candidates frame and both verifies
+    # are filters of it: no job at construct, one to fetch
+    import __spark_entry__ as E
+    E._curation(spark, SF)
+    q = []
+    assert _jobs_during(spark,
+                        lambda: q.append(E.queries()[name](spark, SF))) == 0
+    assert _jobs_launched(spark, q[0]) == 1
+
+
 # --- connected components: one join per round ---------------------------------
 
 # warm-band-key jobs of dedup_clusters at sf0.001: the star-edge and

@@ -499,3 +499,30 @@ def test_streaming_semantic_dedup_matches_batch_form(spark, sf_dir):
             assert g["max_corpus_cos"] == round(mx, 6) or \
                 abs(g["max_corpus_cos"] - mx) < 1e-6
             assert g["is_dup"] == (mx >= SEMANTIC_DEDUP_TAU)
+
+
+def test_concurrent_replays_keep_rows_and_restore_conf(spark, sf_dir):
+    # a replay pins the shared session's shuffle-partition conf while
+    # its query runs: two replays started from two threads run one at
+    # a time, each returns its single-thread rows, and the caller's
+    # value is back afterwards
+    from concurrent.futures import ThreadPoolExecutor
+    from etl_portfolio_tracker_spark.streaming import replay as RP
+    runs = {"window": RP.streaming_window_replay,
+            "join": RP.streaming_join_replay}
+
+    def rows(fn):
+        return sorted(map(tuple, fn(spark, sf_dir).collect()), key=repr)
+
+    solo = {k: rows(fn) for k, fn in runs.items()}
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futs = {k: pool.submit(rows, fn) for k, fn in runs.items()}
+            got = {k: f.result() for k, f in futs.items()}
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, prev)
+    assert got == solo

@@ -50,6 +50,24 @@ def test_minhash_verified_keeps_only_true_near_dups(spark):
     assert [(r["doc_a"], r["doc_b"], r["jaccard"]) for r in rows] == [(0, 1, 1.0)]
 
 
+@pytest.mark.parametrize("fake_hash, message", [
+    # every shingle hashes alike: the xxhash64 guard fires
+    (lambda c: DD.F.lit(7).cast("bigint"), "xxhash64 collision"),
+    # distinct hashes with no bits above the 20th: the packed element
+    # is the weight alone, and shingles of equal weight collide
+    (lambda c: DD.F.crc32(c) % (1 << 20), "44-bit same-weight collision"),
+], ids=["xxhash64", "packed"])
+def test_verify_guards_fail_loudly_on_collision(spark, monkeypatch,
+                                                fake_hash, message):
+    d = docs_df(spark, ["the quick brown fox jumps over the lazy dog",
+                        "the quick brown fox jumps over the lazy cat",
+                        "zzzz xxxx yyyy wwww vvvv uuuu tttt ssss"])
+    cands = spark.createDataFrame([(0, 1)], "doc_a long, doc_b long")
+    monkeypatch.setattr(DD.F, "xxhash64", fake_hash)
+    with pytest.raises(Exception, match=message):
+        DD.verify_candidates(d, cands=cands).collect()
+
+
 def test_minhash_bucket_cap_drops_boilerplate_buckets(spark):
     # 4 identical docs share every band bucket (size 4); cap=3 drops
     # those buckets so no pairs are enumerated; default cap keeps all

@@ -41,7 +41,20 @@ spark.sql.optimizer.canChangeCachedPlanOutputPartitioning at its
 default, false), and a single partition satisfies any clustering or
 ordering, so those operators plan no shuffle over the cached scan and
 a warm consumer runs as one job. The two ledger folds see the same
-layout and skip their repartition (`fold.cluster_by_key`). The layout
+layout and skip their repartition (`fold.cluster_by_key`). A join
+between two frames computed from the memos runs inside their one
+task too (`partitioning.one_partition_join`): a shuffle-hash join,
+whose one-partition children EnsureRequirements leaves unshuffled,
+in place of the broadcast Catalyst would plan, which runs as a job
+of its own.
+Two caveats: the planner keeps those children unshuffled only while
+Catalyst's size estimate of each is at most
+spark.sql.maxSinglePartitionBytes, an estimate that can run orders
+of magnitude above the real size (generators and windows inflate
+it), so the helper falls back to the broadcast above it; and a price
+memo plans an unknown partitioning until its first reader has built
+it (its build runs a shuffle), so a join constructed before that
+broadcasts. The layout
 is measured, not sized by a rule: `tick_prices` is 150 rows over 5
 tickers at every sf, the four `prices` consumers ran as fast from one
 partition as from hash(ticker) into 4 at sf0.1 (596k rows; 4-core

@@ -1783,16 +1783,17 @@ def dedup_threshold_sweep(docs: DataFrame,
             "<= min(thresholds), or let the sweep verify its own.")
     th = spark.createDataFrame([(float(t),) for t in thresholds],
                                "threshold double")
-    hit = (pairs.crossJoin(F.broadcast(th))
-           .filter(F.col("jaccard") >= F.col("threshold")))
-    n_pairs = hit.groupBy("threshold").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"))
-    n_docs = (hit.select("threshold",
-                         F.explode(F.array("doc_a", "doc_b")).alias("d"))
+    # one aggregate over the surviving pairs' endpoints: every pair
+    # yields exactly two endpoint rows, so n_pairs is their count div 2
+    # (two aggregates over the pairs would run the verify tail twice)
+    counts = (pairs.crossJoin(F.broadcast(th))
+              .filter(F.col("jaccard") >= F.col("threshold"))
+              .select("threshold",
+                      F.explode(F.array("doc_a", "doc_b")).alias("d"))
               .groupBy("threshold")
-              .agg(F.count_distinct("d").cast("long").alias("n_docs")))
-    return (th.join(n_pairs, "threshold", "left")
-            .join(n_docs, "threshold", "left")
+              .agg(F.expr("count(1) div 2").alias("n_pairs"),
+                   F.count_distinct("d").cast("long").alias("n_docs")))
+    return (th.join(counts, "threshold", "left")
             .select("threshold",
                     F.coalesce("n_pairs", F.lit(0).cast("long"))
                      .alias("n_pairs"),

@@ -39,6 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from ..functions.partitioning import one_partition, one_partition_join
+
 FOLD_SCHEMA = T.StructType([
     T.StructField("user", T.StringType()),
     T.StructField("ticker", T.StringType()),
@@ -85,13 +87,10 @@ def _fold_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def cluster_by_key(df: DataFrame, *keys: str) -> DataFrame:
     """`df` with all rows of each `keys` value in one partition: as is
-    when its planned physical output is already one partition, else
-    repartitioned on `keys` (an explicit repartition always shuffles,
-    even a one-partition input). Decided from the plan alone:
-    `df.rdd.getNumPartitions()` can run the frame's shuffle stages at
-    construct time under AQE."""
-    plan = df._jdf.queryExecution().sparkPlan()
-    if plan.outputPartitioning().numPartitions() == 1:
+    when its planned physical output is already one partition
+    (`one_partition`), else repartitioned on `keys` (an explicit
+    repartition always shuffles, even a one-partition input)."""
+    if one_partition(df):
         return df
     return df.repartition(*keys)
 
@@ -132,8 +131,10 @@ def overview_full(trades: DataFrame, prices: DataFrame) -> DataFrame:
     ⟕ avg_costs (fold) ⟕ latest_prices (J1) + market_value / invested /
     unreal_pnl / pnl_pct with division guard (F13/F14).
 
-    Join inputs are all bounded by |users|×|tickers| → broadcast joins;
-    the only fact-sized work is the two upstream aggregations.
+    Join inputs are all bounded by |users|×|tickers|; the only
+    fact-sized work is the two upstream aggregations. Over the
+    one-partition session memos both joins run inside the query's one
+    task (`one_partition_join`); otherwise the small sides broadcast.
     """
     from .relational import latest_prices, positions
     pos = positions(trades)
@@ -141,9 +142,10 @@ def overview_full(trades: DataFrame, prices: DataFrame) -> DataFrame:
     last = latest_prices(prices)
     invested = F.col("qty") * F.col("avg_buy_price")
     unreal = (F.col("last_close") - F.col("avg_buy_price")) * F.col("qty")
-    return (pos.join(costs.select("user", "ticker", "avg_buy_price"),
-                     ["user", "ticker"], "left")
-            .join(last, "ticker", "left")
+    with_cost = one_partition_join(
+        pos, costs.select("user", "ticker", "avg_buy_price"),
+        ["user", "ticker"], "left")
+    return (one_partition_join(with_cost, last, "ticker", "left")
             .withColumn("market_value", F.col("qty") * F.col("last_close"))
             .withColumn("invested", invested)
             .withColumn("unreal_pnl", unreal)

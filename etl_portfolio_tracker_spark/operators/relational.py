@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..derive import DEC, dsum
+from ..functions.partitioning import one_partition_join
 
 START_CASH = 1_000_000.0  # reference app/config.py:18
 
@@ -80,15 +81,17 @@ def overview(trades: DataFrame, prices: DataFrame, user: str | None = None) -> D
     (portfolio.py:113-127, sans the avg-cost fold which lives in
     operators/fold.py).
 
-    Both join inputs are aggregates bounded by |tickers| — Catalyst
-    broadcast-joins them under the default threshold, so no repartition
-    of anything fact-sized happens here.
+    Both join inputs are aggregates bounded by |tickers|, so no
+    repartition of anything fact-sized happens here: over the
+    one-partition session memos the join runs inside the query's one
+    task (`one_partition_join`), otherwise Catalyst broadcast-joins the
+    price side under the default threshold.
     """
     pos = positions(trades)
     if user is not None:
         pos = pos.filter(F.col("user") == user)
     last = latest_prices(prices)
-    return (pos.join(last, "ticker", "left")
+    return (one_partition_join(pos, last, "ticker", "left")
             .withColumn("market_value",
                         (F.col("qty") * F.col("last_close")).cast("double"))
             .select("user", "ticker", "qty", "last_close", "last_ts", "market_value"))

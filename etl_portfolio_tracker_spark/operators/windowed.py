@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from ..derive import DEC, dsum
+from ..functions.partitioning import one_partition_join
 from .relational import START_CASH, signed_qty
 
 
@@ -120,10 +121,13 @@ def benchmark_overlay(port: DataFrame, bench: DataFrame) -> DataFrame:
     partitionBy(key).orderBy(ts) — every expression below is already
     key-local. Normalization is close/first·100 in one IEEE divide +
     multiply; the benchmark index stays null before its first
-    observation (the reference's NaN rows)."""
+    observation (the reference's NaN rows). Two series read from the
+    one-partition price memo join inside its one task
+    (`one_partition_join`)."""
     b = bench.select(F.col("ts").alias("b_ts"),
                      F.col("close").alias("bench_close"))
-    joined = port.join(b, port.ts == b.b_ts, "left").drop("b_ts")
+    joined = one_partition_join(port, b, port.ts == b.b_ts,
+                                "left").drop("b_ts")
     w = W.orderBy("ts").rowsBetween(W.unboundedPreceding, W.currentRow)
     filled = F.last("bench_close", ignorenulls=True).over(w)
     port_base = F.first("close", ignorenulls=True).over(w)
@@ -182,8 +186,12 @@ def user_price_panel(trades: DataFrame, prices: DataFrame) -> DataFrame:
     user-keyed aggregate or window, a generator or a broadcast join,
     all of which keep hash(user). A caller whose windows and
     aggregates stay on user / (user, ts) / (user, ticker) keys
-    inherits the same single exchange. The shape depends on these
-    Spark rules (checked on Spark 4.1.2, default confs):
+    inherits the same single exchange. Over the one-partition session
+    memos (`derive.trades`, `derive.tick_prices`) there is no exchange
+    at all: the probe join runs inside the one task as a shuffle-hash
+    join (`one_partition_join`) and no broadcast stage runs. The
+    hash(user) shape depends on these Spark rules (checked on Spark
+    4.1.2, default confs):
 
       * a shuffled join keeps hash(user) only when joined on `user`
         ALONE (spark.sql.requireAllClusterKeysForCoPartition is true,
@@ -201,7 +209,9 @@ def user_price_panel(trades: DataFrame, prices: DataFrame) -> DataFrame:
 
     Scale: |users|·|their tickers|·|grid ∪ trade days| rows — the
     honest cost of per-user panels — spread over hash(user); a user's
-    trade list and ticker set are held in one row.
+    trade list and ticker set are held in one row. The probe join is a
+    broadcast of the price dimension unless both of its inputs plan as
+    one partition, when it runs inside that partition's task.
     """
     from .calendar import interpolate
 
@@ -222,7 +232,8 @@ def user_price_panel(trades: DataFrame, prices: DataFrame) -> DataFrame:
     px = prices.select(F.col("ticker").alias("_pt"),
                        F.col("ts").alias("_pts"), "close")
     key = F.when(F.col("q").isNull(), F.col("ticker"))
-    days = (events.join(F.broadcast(px), key == F.col("_pt"), "left")
+    days = (one_partition_join(events, px, key == F.col("_pt"), "left",
+                               broadcast=True)
             .groupBy("user", F.coalesce("ts", "_pts").alias("ts"))
             .agg(F.first("_tks").alias("_tks"),
                  F.max(F.col("close").isNotNull()).alias("_grid"),
@@ -391,12 +402,18 @@ def twr_with_benchmark(trades: DataFrame, prices: DataFrame,
     broadcast benchmark join (one row per calendar day) and two
     per-user windows that keep that partitioning; the melt is a
     row-local stack. The only other exchange over the panel is the
-    final orderBy's range shuffle of the chart frame.
+    final orderBy's range shuffle of the chart frame. Over the
+    one-partition session memos the benchmark join runs inside the
+    one task (`one_partition_join`) while Catalyst's size estimate of
+    the TWR frame stays under spark.sql.maxSinglePartitionBytes; the
+    estimate grows far faster than the frame (the panel's generators
+    inflate it), and above the cap the join keeps its broadcast.
     """
     twr = portfolio_twr(trades, prices).select("user", "d", "twr_idx")
     b = bench.select(F.col("ts").alias("_bts"),
                      F.col("close").alias("_bc"))
-    j = twr.join(F.broadcast(b), twr.d == F.col("_bts"), "left").drop("_bts")
+    j = one_partition_join(twr, b, twr.d == F.col("_bts"), "left",
+                           broadcast=True).drop("_bts")
     wc = (W.partitionBy("user").orderBy("d")
           .rowsBetween(W.unboundedPreceding, W.currentRow))
     wf = (W.partitionBy("user").orderBy("d")

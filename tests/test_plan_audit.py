@@ -633,9 +633,11 @@ def test_ivf_balance_single_assignment_scan(spark):
 
 # --- per-user TWR panel: one user exchange, no sort-merge join -------------
 
-# warm jobs per query at sf0.001 (AQE runs one job per shuffle stage)
-PANEL_JOB_CAPS = {"portfolio_twr": 3, "portfolio_value_series": 5,
-                  "twr_with_benchmark": 6}
+# jobs per query at sf0.001 over warm price and cold ledger memos: the
+# query's one job plus the ledger build's (AQE runs one job per shuffle
+# stage, a broadcast runs as a job of its own)
+PANEL_JOB_CAPS = {"portfolio_twr": 2, "portfolio_value_series": 2,
+                  "twr_with_benchmark": 2}
 # jobs the one-time build of a session-memoized price table adds
 PRICE_BUILD_JOBS = 2
 
@@ -832,6 +834,69 @@ def test_trades_memo_shared_and_built_once(spark, private_sf):
     assert _jobs_during(spark, lambda: derive.trades(spark, sf)) == 0
     assert derive.trades(spark, sf) is derive.trades(spark, sf)
     assert derive.trades(spark, sf).rdd.getNumPartitions() == 1
+
+
+# --- joins between one-partition memos: inside their one task ----------------
+
+# the queries that join two frames computed from the one-partition memos
+MEMO_JOINS = ("overview", "overview_full", "benchmark_overlay",
+              "portfolio_twr", "portfolio_value_series",
+              "twr_with_benchmark")
+
+
+@pytest.mark.parametrize("name", MEMO_JOINS)
+def test_warm_memo_join_runs_one_job(spark, name):
+    # both join inputs plan as one partition, so the shuffle-hash join
+    # needs no exchange and no broadcast stage runs as a job of its own
+    import __spark_entry__ as E
+    E.queries()[name](spark, SF).collect()  # warm the memos
+    q = E.queries()[name](spark, SF)
+    assert _jobs_launched(spark, q) == 1
+    plan = _outside_cache(physical_plan(q))
+    assert "ShuffledHashJoin" in plan
+    assert "Exchange" not in plan  # no BroadcastExchange either
+
+
+def _one_partition_range(spark, n):
+    from pyspark.sql import functions as F
+    return spark.range(n).coalesce(1).select(F.col("id").alias("k"))
+
+
+def _hints(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString().lower()
+
+
+def test_one_partition_join_hints_small_one_partition_inputs(spark):
+    from etl_portfolio_tracker_spark.functions.partitioning import (
+        one_partition_join)
+    left = _one_partition_range(spark, 50)
+    right = _one_partition_range(spark, 10).withColumnRenamed("k", "r")
+    j = one_partition_join(left, right, left.k == right.r, "left")
+    assert "shuffle_hash" in _hints(j)
+    assert _jobs_launched(spark, j) == 1
+    assert j.count() == 50
+    assert "Exchange" not in physical_plan(j)
+
+
+@pytest.mark.parametrize("broadcast", (False, True))
+def test_one_partition_join_over_the_size_cap_is_unhinted(spark, broadcast):
+    # a cross join's estimate is the product of its sides' (~6.4e11 B
+    # here), far above spark.sql.maxSinglePartitionBytes (128 MiB), so
+    # a hinted join would hash-shuffle both sides: it gets the plain join
+    from etl_portfolio_tracker_spark.functions.partitioning import (
+        one_partition, one_partition_join)
+    big = (spark.range(100_000).crossJoin(
+        spark.range(100_000).withColumnRenamed("id", "id2"))
+        .coalesce(1).withColumnRenamed("id", "k"))
+    small = _one_partition_range(spark, 10).withColumnRenamed("k", "r")
+    assert one_partition(big) and one_partition(small)
+    assert not one_partition(big, 128 * 1024 * 1024)
+    j = one_partition_join(big, small, big.k == small.r, "left",
+                           broadcast=broadcast)
+    hints = _hints(j)
+    assert "shuffle_hash" not in hints
+    assert ("broadcast" in hints) == broadcast
+    assert not exchanges(j)
 
 
 # --- one verify kernel: both near-dup verifies read the curation build --------

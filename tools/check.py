@@ -22,6 +22,18 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# pyspark's applyInPandasWithState serializer pads every output flush
+# with an untyped empty frame before its pd.concat
+# (pyspark/sql/pandas/serializers.py), which pandas >= 2.1 answers with
+# this FutureWarning once per flush, from every Python worker. Frames
+# the state functions yield cannot avoid it; the workers, started by
+# the JVM this process launches, inherit the filter from the
+# environment.
+os.environ["PYTHONWARNINGS"] = ",".join(filter(None, (
+    os.environ.get("PYTHONWARNINGS"),
+    "ignore:The behavior of DataFrame concatenation with empty or all-NA"
+    " entries is deprecated:FutureWarning:pyspark.sql.pandas.serializers")))
+
 import duckdb
 
 SF_DIR_DEFAULT = "/root/testdata/sf0.01"

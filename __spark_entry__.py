@@ -1043,9 +1043,10 @@ def _curation_build(spark, sf_dir):
                                  .parquet(idx_path)))
             fs.append(pool.submit(cands.count))
             # dedup_clusters' construct is itself a driver-
-            # coordinated CC loop (eager per-round jobs) — run it
-            # in the pool so its rounds overlap the candidate-pair
-            # aggregation.
+            # coordinated CC loop: one neighbourhood-build job, then
+            # one eager checkpoint job per round, in one task while
+            # the graph fits one partition — run it in the pool so
+            # its rounds overlap the candidate-pair aggregation.
             f_clusters = pool.submit(
                 lambda: kept(DD.dedup_clusters(
                     docs, band_keys=band_keys).persist()))

@@ -22,6 +22,13 @@ shared by the ledger folds (`fold.cluster_by_key`) and
 `one_partition_join()`, which runs a join between two one-partition
 frames (the session memos of `derive`, and what is computed from
 them) inside their one task instead of planning a broadcast stage.
+
+`max_single_partition_bytes()` is the session's
+spark.sql.maxSinglePartitionBytes, the size up to which
+EnsureRequirements accepts one partition where a clustered
+distribution is required; `one_partition_join()` and the
+connected-components round (`dedup.min_label_components`) compare
+against it.
 """
 
 from __future__ import annotations
@@ -38,6 +45,14 @@ def spread(df: DataFrame, *by: str) -> DataFrame:
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n, *by) if by else df.repartition(n)
+
+
+def max_single_partition_bytes(spark) -> int:
+    """The session's value of spark.sql.maxSinglePartitionBytes, read
+    through its SQLConf entry (the planner's own read)."""
+    entry = spark._jvm.org.apache.spark.sql.internal.SQLConf \
+        .MAX_SINGLE_PARTITION_BYTES()
+    return spark._jsparkSession.sessionState().conf().getConf(entry)
 
 
 def one_partition(df: DataFrame, max_bytes: int | None = None) -> bool:
@@ -80,10 +95,7 @@ def one_partition_join(left: DataFrame, right: DataFrame, on, how: str,
 
     In every other case the join is the plain one, `right` wrapped in
     `F.broadcast` when `broadcast` is set."""
-    spark = left.sparkSession
-    entry = spark._jvm.org.apache.spark.sql.internal.SQLConf \
-        .MAX_SINGLE_PARTITION_BYTES()
-    cap = spark._jsparkSession.sessionState().conf().getConf(entry)
+    cap = max_single_partition_bytes(left.sparkSession)
     if one_partition(left, cap) and one_partition(right, cap):
         return left.join(right.hint("shuffle_hash"), on, how)
     return left.join(F.broadcast(right) if broadcast else right, on, how)

@@ -142,7 +142,7 @@ def prefix_filter_pairs(docs: DataFrame,
     reach the pair join, and candidates shrink by orders of magnitude
     (pinned by test) — this is the form that runs on the FULL corpus.
 
-    r8 adds the POSITIONAL filter (PPJoin, Xiao/Wang/Lin/Yu WWW'08
+    It adds the POSITIONAL filter (PPJoin, Xiao/Wang/Lin/Yu WWW'08
     §3.2): carry each prefix shingle's rank; for a candidate pair the
     smallest SHARED prefix shingle t (positions i in A, j in B) is
     provably the smallest COMMON shingle (any smaller common shingle
@@ -152,7 +152,7 @@ def prefix_filter_pairs(docs: DataFrame,
     J ≥ τ ⟺ |A∩B|·(τn+τd) ≥ τn·(|A|+|B|), so the test is
     (1 + min(nA−i, nB−j))·(τn+τd) ≥ τn·(nA+nB). Zero false negatives
     by the theorem; the brute-force oracle stays unchanged. Measured
-    candidate reduction at sf0.1: see SCALING.md r8.
+    candidate reduction at sf0.1: see SCALING.md.
 
     Scale: shingles -> one shuffle for df counts, one doc-partitioned
     window pair (count + row_number share the sort), prefix self-join
@@ -162,7 +162,7 @@ def prefix_filter_pairs(docs: DataFrame,
     minhash_verified convention) + positional prune on narrow ints
     BEFORE any shingle movement; the exact verify is the survivors-
     only string-keyed pair-explode join (the weighted_jaccard_pairs
-    kernel — collision-FREE, r8; it replaces the xxhash64 array
+    kernel — collision-FREE; it replaces the xxhash64 array
     intersect and its P ≈ n²·2⁻⁶⁵ caveat). At 100 TB the prefix join
     key distribution is capped by construction (a shingle in many
     prefixes has low df by definition of the order, bounded by the
@@ -183,7 +183,7 @@ def prefix_filter_pairs(docs: DataFrame,
     prefix_len = (F.col("_n")
                   - F.expr(f"({tau_num} * _n + {tau_den - 1})"
                            f" div {tau_den}") + 1)
-    # r9: checkpoint the ranked-prefix frame — both self-join sides
+    # checkpoint the ranked-prefix frame — both self-join sides
     # consume it, and branches do not share subplans (the
     # weighted_jaccard_pairs fix, same plan shape: without this the
     # df-join + two windows run twice, deterministically or not per
@@ -280,7 +280,7 @@ def weighted_jaccard_pairs(docs: DataFrame,
     one pair-keyed sum gives Σ w — all codegen, no arrays, no hashes,
     ZERO collision caveat (string-keyed). The array-intersect form
     this replaces folded struct(hash, w) arrays, which
-    `array_intersect` evaluates interpreted (SCALING.md r7: structs
+    `array_intersect` evaluates interpreted (SCALING.md: structs
     cost 32× vs primitive longs); with ~6k survivors the explode is
     ~2M narrow rows — cheaper than shipping both docs' arrays.
     """
@@ -304,14 +304,14 @@ def weighted_jaccard_pairs(docs: DataFrame,
                .withColumn("_suf", F.sum("_w").over(
                    wdoc.orderBy(F.col("_df"), F.col("shingle"))
                        .rowsBetween(W.currentRow, W.unboundedFollowing))))
-    # r9: checkpoint the ranked-prefix frame — it feeds BOTH sides of
+    # checkpoint the ranked-prefix frame — it feeds BOTH sides of
     # the self-join below, and DataFrame branches do not share
-    # subplans (the kn_lm_score lesson, SCALING.md r8): without this
+    # subplans (the kn_lm_score lesson, SCALING.md): without this
     # boundary the two suffix-weight windows run TWICE (measured: 14
     # exchanges / 0 ReusedExchange / 4 Window nodes, 11.6-13.1 s at
-    # sf0.1; the AQE reuse lottery is what made the r8 bench swing
-    # 5.3-14.1 s on the same code). Materializing pref once makes the
-    # plan deterministic.
+    # sf0.1; the AQE reuse lottery swung the same code between 5.3
+    # and 14.1 s). Materializing pref once makes the plan
+    # deterministic.
     pref = iter_checkpoint(
         ordered
         .filter(F.col("_suf") * tau_den >= F.col("_wtot") * tau_num)
@@ -320,7 +320,7 @@ def weighted_jaccard_pairs(docs: DataFrame,
     a = pref.alias("a")
     b = pref.alias("b")
     # pair dedup doubles as the WEIGHTED positional-filter aggregation
-    # (PPJoin, Xiao et al. WWW'08 §3.2, weighted form — r8): the min
+    # (PPJoin, Xiao et al. WWW'08 §3.2, weighted form): the min
     # struct orders by the global shingle order (_df, shingle), so _m
     # carries the smallest shared prefix shingle's suffix weights.
     # That shingle is provably the smallest COMMON shingle (a smaller
@@ -473,7 +473,7 @@ def minhash_lsh_candidates(docs: DataFrame,
           else band_keys).repartition(n, "band", "band_key")
     # cap window runs on the co-partitioned frame — no extra exchange
     w = Window.partitionBy("band", "band_key")
-    # r9: materialize the capped frame — it feeds both self-join
+    # materialize the capped frame — it feeds both self-join
     # sides, and the claimed exchange reuse is an AQE lottery
     # (measured 0 ReusedExchange / 4 Window nodes: the cap window ran
     # twice). |docs|×B narrow rows — cheap at any scale, and the
@@ -753,15 +753,37 @@ def min_label_components(labels: DataFrame, edges: DataFrame,
     neighbors' labels — Bellman-Ford-style, converging in
     graph-diameter + 1 rounds to cluster_id = min(doc_id in component).
 
-    Round shape — one step per round, about 3 Spark jobs under AQE:
-    - The closed neighbourhood is built and persisted once: the edges
-      whose doc_a is a label row (a semi-join) plus one self-loop
-      (doc_id, doc_id) per label row. A step is then one join and one
-      aggregate, `nbrs ⋈ labels on doc_b → min(cluster_id) per doc_a`:
-      the self-loop brings each node's own label into the min, so the
-      step computes least(own, min neighbour) with no left join back
-      onto the labels (whose exchange and broadcast are jobs of their
-      own under AQE).
+    Round shape — one step per round, one Spark job while the graph
+    fits one partition:
+    - The closed neighbourhood is built once: the edges whose doc_a is
+      a label row (a semi-join) plus one self-loop (doc_id, doc_id)
+      per label row. It is persisted and materialized before the
+      loop, in one job that counts its rows.
+    - A step is one window and one aggregate, with no join: the
+      neighbourhood rows (doc_a, doc_b, NULL) are unioned with the
+      label rows (NULL, doc_id, cluster_id); min(cluster_id) over a
+      window partitioned by doc_b carries each node's label onto
+      every edge that ends at it; the label rows are dropped and
+      min per doc_a is the new label. The self-loop brings each
+      node's own label into the min, and an edge whose doc_b is not
+      a label row carries NULL, which min ignores.
+    - Layout: when the neighbourhood's measured size is at most
+      spark.sql.maxSinglePartitionBytes, the union is coalesced to
+      one partition. One partition satisfies the clustering both the
+      window and the aggregate require, so the step plans no Exchange
+      and runs in one task: the round is its checkpoint's job alone.
+      Above the cap the union stays as it is and the same plan
+      shuffles it by doc_b for the window and by doc_a for the
+      aggregate. The size is measured (rows counted when the
+      neighbourhood is materialized, times the UnsafeRow width of
+      its two fixed-width columns), never read off Catalyst: the
+      estimate of a frame built by a join is the product of its
+      children's, and a pair join sits under both consumers' edges
+      (with a join in the round, the checkpointed labels after one
+      round at sf0.001 read 1.1 GB for 500 rows). The neighbourhood
+      is materialized before any coalesce, so the coalesce never
+      pulls the plan that builds it (e.g. semantic_clusters' cosine
+      pair join) into one task.
     - The step's output is checkpointed each round so lineage stays
       O(1) (`iter_checkpoint`: reliable `checkpoint()` to the session's
       checkpoint dir when one is configured — the cluster-durable,
@@ -778,7 +800,7 @@ def min_label_components(labels: DataFrame, edges: DataFrame,
     One step per round, not more: every round is a cluster barrier,
     yet unrolling two steps into a round, or adding pointer jumping,
     launched as many jobs or more in total, because each extra step
-    costs the same joins and near-dup graphs have tiny diameters (dup
+    costs the same work and near-dup graphs have tiny diameters (dup
     groups are quasi-cliques: LSH links most pairs directly).
 
     `max_iter` is the round budget; a graph that has not converged
@@ -791,6 +813,7 @@ def min_label_components(labels: DataFrame, edges: DataFrame,
     """
     from pyspark.sql import Observation
     from ..derive import DEC
+    from ..functions.partitioning import max_single_partition_bytes
 
     labels = iter_checkpoint(labels, eager=True)
     ids = labels.select("doc_id")
@@ -801,12 +824,29 @@ def min_label_components(labels: DataFrame, edges: DataFrame,
                                     F.col("doc_id").alias("doc_b")))
             .persist())
     try:
+        built = Observation()
+        (nbrs.observe(built, F.count(F.lit(1)).alias("n"))
+         .write.format("noop").mode("overwrite").save())
+        # an UnsafeRow of two fixed-width columns: null bitset + 2 slots
+        one_task = (built.get["n"] * 24
+                    <= max_single_partition_bytes(nbrs.sparkSession))
+        no_label = F.lit(None).cast(labels.schema["cluster_id"].dataType)
+        no_node = F.lit(None).cast(nbrs.schema["doc_a"].dataType)
+        edge_rows = nbrs.select("doc_a", "doc_b",
+                                no_label.alias("cluster_id"))
+        by_b = W.partitionBy("doc_b")
         prev_fp = None
         for _ in range(max_iter):
             obs = Observation()
-            step = (nbrs
-                    .join(labels.select(F.col("doc_id").alias("doc_b"),
-                                        "cluster_id"), "doc_b")
+            both = edge_rows.unionByName(labels.select(
+                no_node.alias("doc_a"), F.col("doc_id").alias("doc_b"),
+                "cluster_id"))
+            if one_task:
+                both = both.coalesce(1)
+            step = (both
+                    .withColumn("cluster_id",
+                                F.min("cluster_id").over(by_b))
+                    .filter(F.col("doc_a").isNotNull())
                     .groupBy(F.col("doc_a").alias("doc_id"))
                     .agg(F.min("cluster_id").alias("cluster_id")))
             labels = iter_checkpoint(
@@ -1030,8 +1070,8 @@ def canonical_docs(docs: DataFrame,
 def prune_exact_stage(docs: DataFrame) -> DataFrame:
     """corpus_prune's exact-dup stage verdict, (doc_id, _exact_keep) —
     exposed so the shared curation build can materialize it WHILE the
-    clusters CC loop runs (r10, guide §2.6; it does not depend on
-    clusters). corpus_prune derives it itself when not supplied."""
+    clusters CC loop runs (it does not depend on clusters).
+    corpus_prune derives it itself when not supplied."""
     from .text import fingerprint
     fp = fingerprint(docs).select("doc_id", "fingerprint")
     w_fp = W.partitionBy("fingerprint").orderBy("doc_id")
@@ -1149,7 +1189,7 @@ def pagerank(docs: DataFrame, n_iter: int = PAGERANK_ITERS,
     # checkpoint, so each runtime iteration is one join + one
     # aggregation over the materialized weighted edges instead of
     # re-deriving edges ⋈ deg (and the LSH pipeline behind it).
-    # r10: EAGER — the 10-iteration plan references this frame once
+    # EAGER — the 10-iteration plan references this frame once
     # per round, and a lazy localCheckpoint re-ran its subplan per
     # consumer inside the one final action (quiet interleaved A/B
     # min 5.19 s lazy vs 4.00 s eager at sf0.1; same pattern measured
@@ -1519,16 +1559,16 @@ def delta_dedup(docs: DataFrame, mod: int = DELTA_MOD,
 
 
 def curation_serve(docs: DataFrame, index_path: str) -> DataFrame:
-    """Production STEADY-STATE of the curation spine (VERDICT r8 item
-    6): serve verified near-dup pairs from the PERSISTED band-key
-    index instead of recomputing the MinHash signature stage per
-    report. The nightly/ingest job materializes
-    `minhash_band_keys(docs)` to parquet (delta_dedup's step 3 — in
-    this repo, `_curation` in __spark_entry__.py writes it as part of
-    the one-time `_curation_build` line item); every downstream
+    """Production STEADY-STATE of the curation spine: serve verified
+    near-dup pairs from the PERSISTED band-key index instead of
+    recomputing the MinHash signature stage per report. The
+    nightly/ingest job materializes `minhash_band_keys(docs)` to
+    parquet (delta_dedup's step 3 — in this repo, `_curation` in
+    __spark_entry__.py writes it as part of the one-time
+    `_curation_build` line item); every downstream
     consumer then pays only: one scan of the |docs|×B-row index
     (partitioned on (band, band_key) — bucket-local candidate join,
-    SCALING.md r8 measured 1.7 s for the full 409k-candidate set at
+    SCALING.md measured 1.7 s for the full 409k-candidate set at
     sf0.1 from a fresh session) plus the candidate-bounded exact
     verify. The sha256 shingle signature scan — the dominant cost of
     the cold build — never runs on the serve path.
@@ -1624,7 +1664,7 @@ def common_substring_pairs(docs: DataFrame,
 
 
 SIMHASH_PAIR_BITS = 32     # fingerprint width for PAIRING (16-bit —
-# the standalone `simhash` query's width until round 4 — saturates by
+# the standalone `simhash` query's width — saturates by
 # the birthday bound once |docs| approaches 2^8: at sf0.1's 5000 docs
 # it emitted 1.5M hamming<=2 pairs, almost all chance collisions. 32
 # bits keeps chance pairs negligible at oracle scales; production

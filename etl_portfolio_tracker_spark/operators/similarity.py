@@ -380,7 +380,7 @@ def embedding_near_dup_pairs(
     band (MinHash-style banding over random hyperplanes). The verify
     step computes exact cosine on candidates only.
 
-    Scale posture (fixes the r1 scale-killer, VERDICT r1 #6): the old
+    Scale posture: the old
     single-band 8-plane formulation had a FIXED 256-bucket space, so
     within-bucket pairing was O(n²/256) — quadratic at 100 TB.  Now:
       * `band_planes` sets the bucket space per band (2^band_planes)
@@ -419,7 +419,7 @@ def embedding_near_dup_pairs(
     bk = (_spread(emb)
           .select("vec_id", F.explode(entries).alias("_bb"))
           .select("vec_id", "_bb.band", "_bb.bucket"))
-    # Cap via a count window on (band, bucket), then MATERIALIZE (r9):
+    # Cap via a count window on (band, bucket), then MATERIALIZE:
     # the "self-join reuses the exchange" claim was an AQE lottery —
     # measured 4 Window nodes / at best 1 ReusedExchange, i.e. the cap
     # window ran twice. The checkpointed frame is |vecs|×bands narrow
@@ -934,7 +934,7 @@ def semantic_cells(n_rows: int, cap: int = SEMANTIC_CELL_CAP) -> int:
     Spark driver and the oracle's SQL CASE ladder (which pins the
     same thresholds: c=8 ⇔ n≤64, 16 ⇔ n≤256, 32 ⇔ n≤1024, ...).
 
-    Measured motivation (BENCH_FULL r4): with n_cells FIXED at 8 the
+    Measured motivation: with n_cells FIXED at 8 the
     intra-cell pair scan was N²/16 — 12.8 s at sf0.1 (1.5M pairs) and
     quadratic beyond; with c ~ √N the same query is sub-second and
     pair growth is ~N^1.5."""
@@ -975,14 +975,12 @@ def semantic_dedup(emb: DataFrame, n_cells: int | None = None,
         # last-resort sizing only: callers should pass n_cells from
         # catalog statistics (io.table_num_rows — zero Spark jobs)
         n_cells = semantic_cells(emb.count())
-    # r8: the dense-id validation moved INSIDE the consuming job
-    # (sentinel-guarded window count, _guarded_codebook) — the old
-    # separate cents.count() was a plan-build action before any work,
-    # the same class the r7 verdict removed from
-    # hard_negative_mining_lsh.
+    # the dense-id validation runs INSIDE the consuming job
+    # (sentinel-guarded window count, _guarded_codebook): a separate
+    # cents.count() would be a plan-build action before any work.
     from ..functions.checkpoints import iter_checkpoint
     cents = _guarded_codebook(emb, n_cells, "semantic_dedup")
-    # r9: the assignment frame feeds BOTH pair-join sides and the
+    # the assignment frame feeds BOTH pair-join sides and the
     # final flag join — 3 lineage branches, and branches do not share
     # subplans (the weighted_jaccard_pairs/kn_lm lesson): without the
     # boundary the N×c crossJoin + argmax window ran up to 3×.
@@ -1002,17 +1000,16 @@ def semantic_dedup(emb: DataFrame, n_cells: int | None = None,
 
 def _guarded_codebook(emb: DataFrame, n_cells: int, who: str) -> DataFrame:
     """First-n_cells codebook with the dense-id validation folded INTO
-    the consuming job — no plan-build action (r6 verdict: the separate
-    `cents.count()` was a blocking scan before any work). A SENTINEL
-    row is unioned in before the global window count (model-sized
-    frame, ≤ cell cap + 1 — the SinglePartition is over ~√N rows, not
-    the fact), so `assert_true` evaluates even when the corpus has
-    ZERO vec_ids below n_cells (ADVICE r7 item 2: the sentinel-free
-    window had no rows to assert on for fully-sparse ids, and the
-    consumer silently returned empty where the replaced
-    `cents.count()` path raised); the filter keeps every real row
-    while forcing evaluation (the ema_final guard pattern,
-    finance.py), then drops the sentinel."""
+    the consuming job — no plan-build action (a separate
+    `cents.count()` would be a blocking scan before any work). A
+    SENTINEL row is unioned in before the global window count
+    (model-sized frame, ≤ cell cap + 1 — the SinglePartition is over
+    ~√N rows, not the fact), so `assert_true` evaluates even when the
+    corpus has ZERO vec_ids below n_cells (a sentinel-free window has
+    no rows to assert on for fully-sparse ids, and the consumer would
+    silently return empty where a `cents.count()` check raises); the
+    filter keeps every real row while forcing evaluation (the
+    ema_final guard pattern, finance.py), then drops the sentinel."""
     vec_type = emb.schema["embedding"].dataType.simpleString()
     sentinel = (emb.sparkSession.range(1)
                 .select(F.lit(-1).cast("int").alias("_cid"),
@@ -1084,12 +1081,14 @@ def semantic_clusters(emb: DataFrame, n_cells: int | None = None,
     Scale shape: pair generation is the cell-bounded scan (≈N^1.5
     under the √N cell rule); components use the shared min-label
     propagation kernel (dedup.min_label_components — one propagation
-    step per round: the persisted closed neighbourhood joined with the
-    labels and min-aggregated per vector, the result checkpointed with
-    its convergence fingerprint observed on the checkpoint job; O(1)
-    lineage and driver state). Components are cell-local, since pairs
-    are intra-cell by construction, so the diameter is tiny and the
-    loop runs diameter + 1 rounds, a handful in practice.
+    step per round: the persisted closed neighbourhood unioned with
+    the labels, a min over a window per edge target, then a min per
+    vector, run in one task while the measured neighbourhood fits one
+    partition and checkpointed with its convergence fingerprint
+    observed on the checkpoint job; O(1) lineage and driver state).
+    Components are cell-local, since pairs are intra-cell by
+    construction, so the diameter is tiny and the loop runs
+    diameter + 1 rounds, a handful in practice.
 
     Oracle: recursive-CTE transitive closure over the same pair
     predicate — the dedup_clusters twin on the embedding side.
@@ -1098,14 +1097,15 @@ def semantic_clusters(emb: DataFrame, n_cells: int | None = None,
     if n_cells is None:
         # last-resort sizing only (see semantic_dedup)
         n_cells = semantic_cells(emb.count())
-    # r8: guarded codebook — previously an unvalidated filter, so a
-    # sparse-id corpus silently got a short codebook; now the dense-id
-    # assert rides the consuming job (no plan-build action either)
+    # guarded codebook: an unvalidated filter would give a sparse-id
+    # corpus a short codebook silently; the dense-id assert rides the
+    # consuming job (no plan-build action either)
     from ..functions.checkpoints import iter_checkpoint
     cents = _guarded_codebook(emb, n_cells, "semantic_clusters")
-    # r9: checkpoint the assignment — it feeds both pair-join sides
-    # (see semantic_dedup; measured 4.08 s warm → the dominant phase
-    # of this operator's 7.9 s canonical line)
+    # checkpoint the assignment — it feeds both pair-join sides
+    # (see semantic_dedup; without it the pair phase, which ran the
+    # assignment once per side, took 4.08 s warm at sf0.1 and was
+    # the dominant phase; SCALING.md)
     cells = iter_checkpoint(_semantic_cells_frame(emb, cents),
                             eager=False)
     pairs = (_semantic_cos_pairs(cells)
@@ -1363,7 +1363,7 @@ def hard_negative_mining(emb: DataFrame) -> DataFrame:
 def hard_negative_mining_lsh(emb: DataFrame,
                              n_cells: int | None = None) -> DataFrame:
     """Candidate-bounded hard-negative/positive mining — the
-    PRODUCTION form of hard_negative_mining (VERDICT r5 item 6): the
+    PRODUCTION form of hard_negative_mining: the
     pair set is restricted to SemDeDup cells (the semantic_dedup
     assignment — argmax-dot against the deterministic first-c
     codebook, c ~ √N per semantic_cells), so per-vector candidates

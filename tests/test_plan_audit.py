@@ -647,6 +647,10 @@ def _jobs_launched(spark, df) -> int:
 
 
 def _jobs_during(spark, action) -> int:
+    return len(_job_ids_during(spark, action))
+
+
+def _job_ids_during(spark, action) -> list[int]:
     import uuid
     sc = spark.sparkContext
     group = "plan-audit-" + uuid.uuid4().hex[:8]
@@ -656,7 +660,7 @@ def _jobs_during(spark, action) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture
@@ -913,11 +917,12 @@ def test_warm_verify_consumer_runs_one_job(spark, name):
     assert _jobs_launched(spark, q[0]) == 1
 
 
-# --- connected components: one join per round ---------------------------------
+# --- connected components: one job per round ---------------------------------
 
 # warm-band-key jobs of dedup_clusters at sf0.001: the star-edge and
-# label checkpoints plus about 3 jobs per propagation round
-DEDUP_CLUSTERS_JOB_CAP = 36
+# label checkpoints, the neighbourhood build and one job per
+# propagation round
+DEDUP_CLUSTERS_JOB_CAP = 17
 
 
 def _outside_cache(plan: str) -> str:
@@ -948,11 +953,8 @@ def test_dedup_clusters_job_count(spark):
     assert jobs <= DEDUP_CLUSTERS_JOB_CAP
 
 
-def test_cc_round_is_one_join_one_aggregate(cc_graph, monkeypatch):
-    # a round is nbrs ⋈ labels → min per doc: one join, no left join
-    # back onto the labels, one (final) aggregate
-    import re
-    from etl_portfolio_tracker_spark.operators import dedup as DD
+def _recorded_checkpoints(monkeypatch, DD) -> list:
+    """Patch DD.iter_checkpoint to record each frame it is given."""
     checkpointed = []
     real = DD.iter_checkpoint
 
@@ -961,15 +963,102 @@ def test_cc_round_is_one_join_one_aggregate(cc_graph, monkeypatch):
         return real(df, eager=eager)
 
     monkeypatch.setattr(DD, "iter_checkpoint", record)
+    return checkpointed
+
+
+def test_cc_round_is_one_window_one_aggregate(cc_graph, monkeypatch):
+    # a round is (neighbourhood ∪ labels) → min over a doc_b window →
+    # min per doc: no join, no left join back onto the labels, one
+    # window, one (final) aggregate, and no exchange outside the
+    # cached neighbourhood while the graph fits one partition
+    import re
+    from etl_portfolio_tracker_spark.operators import dedup as DD
+    checkpointed = _recorded_checkpoints(monkeypatch, DD)
     labels0, edges = cc_graph([(0, 1), (1, 2), (3, 4)], 6)
     DD.min_label_components(labels0, edges).collect()
     # [0] is the initial labels; [1] the first round
     plan = _outside_cache(physical_plan(checkpointed[1]))
-    assert len(re.findall(r"\w+Join\b", plan)) == 1
+    assert not re.findall(r"\w+Join\b", plan)
     assert "LeftOuter" not in plan
+    assert len(re.findall(r"\bWindow\b", plan)) == 1
+    assert "Exchange" not in plan
     finals = [ln for ln in plan.splitlines()
               if "HashAggregate" in ln and "partial_" not in ln]
     assert len(finals) == 1
+
+
+def test_cc_every_round_runs_one_job_of_one_task(
+        spark, cc_graph, monkeypatch):
+    # the round's window and aggregate run inside its checkpoint's one
+    # task: no broadcast, no shuffle stage, no other job per round
+    from etl_portfolio_tracker_spark.operators import dedup as DD
+    st = spark.sparkContext.statusTracker()
+    real = DD.iter_checkpoint
+    per_call = []  # the task count of each job, per checkpoint call
+
+    def counted(df, eager=True):
+        out = []
+        jobs = _job_ids_during(spark,
+                               lambda: out.append(real(df, eager=eager)))
+        per_call.append([sum(st.getStageInfo(s).numTasks
+                             for s in st.getJobInfo(j).stageIds)
+                         for j in jobs])
+        return out[0]
+
+    monkeypatch.setattr(DD, "iter_checkpoint", counted)
+    labels0, edges = cc_graph([(i, i + 1) for i in range(5)], 8)
+    DD.min_label_components(labels0, edges).collect()
+    # [0] is the initial labels, then one call per round (the
+    # neighbourhood is built before the first): path 0..5 takes 5
+    # rounds to carry label 0 across plus one to see the fixpoint
+    rounds = per_call[1:]
+    assert len(rounds) == 6
+    assert rounds == [[1]] * len(rounds)
+
+
+def test_cc_above_single_partition_cap_shuffles_and_matches_union_find(
+        spark, monkeypatch):
+    # a neighbourhood measured above spark.sql.maxSinglePartitionBytes
+    # keeps the union as it is: the round hash-shuffles by doc_b for
+    # the window and by doc_a for the aggregate, with the same labels
+    import random
+    from pyspark.sql import functions as F
+    from etl_portfolio_tracker_spark.operators import dedup as DD
+    key = "spark.sql.maxSinglePartitionBytes"
+    prev = spark.conf.get(key, None)
+    checkpointed = _recorded_checkpoints(monkeypatch, DD)
+    rng = random.Random(11)
+    spark.conf.set(key, "1")
+    try:
+        for trial in range(3):
+            n = 30
+            pairs = sorted({tuple(sorted(rng.sample(range(n), 2)))
+                            for _ in range(rng.randint(5, 40))})
+            parent = list(range(n))
+
+            def find(x):
+                while parent[x] != x:
+                    x = parent[x]
+                return x
+
+            for a, b in pairs:
+                parent[max(find(a), find(b))] = min(find(a), find(b))
+            edges = spark.createDataFrame(
+                pairs + [(b, a) for a, b in pairs], "doc_a long, doc_b long")
+            labels0 = spark.range(n).select(F.col("id").alias("doc_id"),
+                                            F.col("id").alias("cluster_id"))
+            del checkpointed[:]
+            got = {r["doc_id"]: r["cluster_id"] for r in
+                   DD.min_label_components(labels0, edges).collect()}
+            assert got == {i: find(i) for i in range(n)}, trial
+            plan = _outside_cache(physical_plan(checkpointed[1]))
+            assert "Exchange hashpartitioning(doc_b" in plan
+            assert "Exchange hashpartitioning(doc_a" in plan
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def test_cc_concurrent_calls_match_serial(cc_graph):

@@ -955,20 +955,32 @@ def _q_sliding_rollup(spark, sf_dir):
 
 
 def _docs(spark, sf_dir):
-    """Documents reader for the registry: the harness table is ONE
-    parquet split, so every token/shingle/char explode downstream
-    inherited a single-partition layout and ran its map stage on one
-    core (guide §2.5; measured: a 16-query text/sketch batch dropped
-    40.7 → 28.4 s best-of-2 from this spread alone — char_entropy
-    3.5 → 0.9, bpe_token_counts 6.3 → 2.4). spread() is a no-op on a
-    cluster where the table arrives in real splits. The spread frame
-    is session-memoized per sf_dir like read_table, so the .rdd
-    partition-count probe runs once per session."""
+    """Documents reader for the registry: the `documents` table spread
+    to hash(doc_id, n) over the cluster's slots (`spread()`; the
+    harness table is one parquet split, and every token, shingle or
+    char explode downstream would inherit its one-task layout; a
+    table that arrives in n or more splits is left as read),
+    persisted once per session and documents version.
+
+    The frame is materialized before it is handed out: its `.rdd`
+    runs the one shuffle over the parquet and fills the cache, with no
+    result stage. Until then AQE reports the cached plan's output
+    partitioning as unknown, so a reader planned over it would add
+    its own `Exchange hashpartitioning(doc_id, n)` and re-shuffle the
+    parquet; once materialized, every reader plans over a cache known
+    to be hash(doc_id, n), and a per-doc aggregate or window over it
+    needs no exchange. `_curation_reset` drops it with the curation
+    state, so a rebuild reads and shuffles the parquet once."""
     from etl_portfolio_tracker_spark.functions.partitioning import spread
-    return session_memo(
-        spark, ("docs", sf_dir),
-        lambda: spread(read_table(spark, sf_dir, "documents"), "doc_id"),
-        stamp=table_stamp(sf_dir, "documents"))
+
+    def build():
+        docs = spread(read_table(spark, sf_dir, "documents"),
+                      "doc_id").persist()
+        docs.rdd.getNumPartitions()
+        return docs
+
+    return session_memo(spark, ("docs", sf_dir), build,
+                        stamp=table_stamp(sf_dir, "documents"))
 
 
 def _curation(spark, sf_dir):
@@ -1097,11 +1109,13 @@ def _verified(spark, sf_dir):
 
 
 def _curation_reset(spark):
-    """Drop this session's shared curation state and unpersist its
-    frames, so the next `_curation` call rebuilds the whole state
-    from parquet — nothing from an earlier build is reused (bench.py's
-    best-of-2 build retry and perfbench's curation workload)."""
-    session_drop(spark, lambda k: k[0] == "curation")
+    """Drop this session's shared curation state and the documents
+    frame it reads (`_docs`), and unpersist their frames, so the next
+    `_curation` call rebuilds the whole state from parquet — reading
+    and shuffling the documents table once; nothing from an earlier
+    build is reused (bench.py's best-of-2 build retry and perfbench's
+    curation workload)."""
+    session_drop(spark, lambda k: k[0] in ("curation", "docs"))
 
 
 def _emb(spark, sf_dir):

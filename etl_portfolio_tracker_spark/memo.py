@@ -14,7 +14,7 @@ from pyspark.sql import SparkSession
 _MEMO: dict = {}
 # guards the two tables; held for table updates only, never across a
 # build, so a build may call back into session_memo from pool threads
-# (the curation build reads the memoized documents scan)
+# (the curation build reads the memoized, persisted documents frame)
 _MEMO_LOCK = threading.Lock()
 # one lock per (application, key), held across that key's build:
 # concurrent misses on one key build it once, other keys proceed.

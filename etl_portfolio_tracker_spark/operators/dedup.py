@@ -755,10 +755,10 @@ def min_label_components(labels: DataFrame, edges: DataFrame,
 
     Round shape — one step per round, one Spark job while the graph
     fits one partition:
-    - The closed neighbourhood is built once: the edges whose doc_a is
-      a label row (a semi-join) plus one self-loop (doc_id, doc_id)
-      per label row. It is persisted and materialized before the
-      loop, in one job that counts its rows.
+    - The closed neighbourhood is built once, with no join: the edges
+      plus one self-loop (doc_id, doc_id) per label row. It is
+      persisted and materialized before the loop, in one job that
+      counts its rows.
     - A step is one window and one aggregate, with no join: the
       neighbourhood rows (doc_a, doc_b, NULL) are unioned with the
       label rows (NULL, doc_id, cluster_id); min(cluster_id) over a
@@ -766,7 +766,12 @@ def min_label_components(labels: DataFrame, edges: DataFrame,
       every edge that ends at it; the label rows are dropped and
       min per doc_a is the new label. The self-loop brings each
       node's own label into the min, and an edge whose doc_b is not
-      a label row carries NULL, which min ignores.
+      a label row carries NULL, which min ignores. A doc_a that is
+      not a label row has no self-loop carrying a label, so the
+      aggregate's own-label column is NULL and its row is dropped:
+      the labels keep exactly the label rows' doc_ids. (Restricting
+      the edges to label rows up front took a semi-join whose
+      broadcast of the label ids ran as a job of its own.)
     - Layout: when the neighbourhood's measured size is at most
       spark.sql.maxSinglePartitionBytes, the union is coalesced to
       one partition. One partition satisfies the clustering both the
@@ -816,12 +821,9 @@ def min_label_components(labels: DataFrame, edges: DataFrame,
     from ..functions.partitioning import max_single_partition_bytes
 
     labels = iter_checkpoint(labels, eager=True)
-    ids = labels.select("doc_id")
     nbrs = (edges.select("doc_a", "doc_b")
-            .join(ids.select(F.col("doc_id").alias("doc_a")), "doc_a",
-                  "left_semi")
-            .unionByName(ids.select(F.col("doc_id").alias("doc_a"),
-                                    F.col("doc_id").alias("doc_b")))
+            .unionByName(labels.select(F.col("doc_id").alias("doc_a"),
+                                       F.col("doc_id").alias("doc_b")))
             .persist())
     try:
         built = Observation()
@@ -848,7 +850,11 @@ def min_label_components(labels: DataFrame, edges: DataFrame,
                                 F.min("cluster_id").over(by_b))
                     .filter(F.col("doc_a").isNotNull())
                     .groupBy(F.col("doc_a").alias("doc_id"))
-                    .agg(F.min("cluster_id").alias("cluster_id")))
+                    .agg(F.min("cluster_id").alias("cluster_id"),
+                         F.min(F.when(F.col("doc_a") == F.col("doc_b"),
+                                      F.col("cluster_id"))).alias("own"))
+                    .filter(F.col("own").isNotNull())
+                    .drop("own"))
             labels = iter_checkpoint(
                 step.observe(
                     obs, F.sum(F.col("cluster_id").cast(DEC)).alias("fp")),
@@ -1173,7 +1179,7 @@ def pagerank(docs: DataFrame, n_iter: int = PAGERANK_ITERS,
     Scale: per iteration one join of ranks into edges (both hash-
     partitioned on the source key) + one aggregation by destination —
     the standard Pregel-free SQL PageRank; lineage stays 3 plans deep
-    (fixed n_iter), so no checkpointing is needed. The rank state is
+    (fixed n_iter), so the ranks need no checkpoint. The rank state is
     |docs| rows, never driver-side."""
     from ..derive import DEC
     cands = (minhash_lsh_candidates(docs) if cands is None
@@ -1199,7 +1205,11 @@ def pagerank(docs: DataFrame, n_iter: int = PAGERANK_ITERS,
         edges.join(deg, "src").select("src", "dst", "deg"),
         eager=True)
     total = docs.agg(F.count(F.lit(1)).alias("_n"))
-    base = (docs.select("doc_id").crossJoin(F.broadcast(total)))
+    # every iteration reads base: checkpointed, the count and its
+    # broadcast run once (a cached documents scan is a query stage of
+    # its own per reference, so AQE reuses no exchange built above it)
+    base = iter_checkpoint(
+        docs.select("doc_id").crossJoin(F.broadcast(total)), eager=False)
     ranks = base.select("doc_id", "_n",
                         (F.lit(1.0) / F.col("_n")).alias("rank"))
     for _ in range(n_iter):
@@ -1862,8 +1872,13 @@ def doc_containment(docs: DataFrame,
     container_tokens) ordered."""
     from .text import tokens_col
     runs = common_substring_pairs(docs, n, min_run, df_cap)
-    nt = docs.select("doc_id",
-                     F.size(tokens_col()).cast("long").alias("_nt"))
+    # both endpoint joins read nt: checkpointed, it is broadcast once
+    # (a cached documents scan is a query stage of its own per
+    # reference, so AQE reuses no exchange built above it)
+    nt = iter_checkpoint(
+        docs.select("doc_id",
+                    F.size(tokens_col()).cast("long").alias("_nt")),
+        eager=False)
     j = (runs
          .join(nt.select(F.col("doc_id").alias("doc_a"),
                          F.col("_nt").alias("_na")), "doc_a")

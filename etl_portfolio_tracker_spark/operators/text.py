@@ -545,15 +545,20 @@ def source_divergence(docs: DataFrame) -> DataFrame:
     bit-identical across engines on identical counts; the final
     per-source sum goes through the decimal rule.
 
-    Scale shape: two count aggregations (token key, then
-    (source, token) key), one hash join between them on the token key,
-    and a final per-source rollup — every stage key-partitioned, model
-    never broadcast (vocabulary-sized, like the bigram LM).
+    Scale shape: one (source, token) count aggregation, rolled up to
+    the token key (c_w = Σ_s c_sw, exact), one hash join between them
+    on the token key, and a final per-source rollup — every stage
+    key-partitioned, model never broadcast (vocabulary-sized, like the
+    bigram LM). The (source, token) counts are checkpointed: three
+    consumers read them, and a cached documents scan is a query stage
+    of its own per reference, so AQE would reuse no exchange built
+    above it.
     """
+    from ..functions.checkpoints import iter_checkpoint
     tok = docs.select("source", F.explode(tokens_col()).alias("token"))
-    by_src = tok.groupBy("source", "token").agg(
-        F.count(F.lit(1)).alias("c_sw"))
-    by_tok = tok.groupBy("token").agg(F.count(F.lit(1)).alias("c_w"))
+    by_src = iter_checkpoint(tok.groupBy("source", "token").agg(
+        F.count(F.lit(1)).alias("c_sw")), eager=False)
+    by_tok = by_src.groupBy("token").agg(F.sum("c_sw").alias("c_w"))
     totals = by_src.groupBy("source").agg(F.sum("c_sw").alias("n_s"))
     grand = by_tok.agg(F.sum("c_w").alias("_n"))
     term = (by_src.join(by_tok, "token")

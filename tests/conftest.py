@@ -1,5 +1,6 @@
 import os
 import sys
+import time
 
 import pytest
 
@@ -9,6 +10,31 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from etl_portfolio_tracker_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
+
+# The Tier-1 suite runs under a 2670 s timeout. A run past 70 % of it
+# fails here, with its wall time, while there is still headroom: a
+# suite that creeps up to the timeout would be cut off with no report.
+TIER1_TIMEOUT_S = 2670
+TIER1_BUDGET_S = 0.70 * TIER1_TIMEOUT_S
+
+
+def pytest_sessionstart(session):
+    session.config.started_at = time.monotonic()
+
+
+def pytest_sessionfinish(session, exitstatus):
+    # runs before the terminal summary, which reports the wall time
+    session.config.wall_s = time.monotonic() - session.config.started_at
+    if session.config.wall_s > TIER1_BUDGET_S and exitstatus == 0:
+        session.exitstatus = pytest.ExitCode.TESTS_FAILED
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    over = config.wall_s > TIER1_BUDGET_S
+    terminalreporter.write_line(
+        f"session wall time {config.wall_s:.0f} s, budget"
+        f" {TIER1_BUDGET_S:.0f} s (70 % of the {TIER1_TIMEOUT_S} s Tier-1"
+        " timeout)" + (": OVER BUDGET" if over else ""))
 
 
 @pytest.fixture(scope="session")

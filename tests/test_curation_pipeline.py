@@ -62,15 +62,63 @@ def test_pipeline_outputs_match_standalone(docs):
 
 def test_registry_state_memoized_and_reset(spark, sf_dir):
     # the registry's shared state is built once per session; the reset
-    # drops it and unpersists every frame it held
+    # drops it and the documents frame it reads, and unpersists every
+    # frame they held
     import __spark_entry__ as E
     st = E._curation(spark, sf_dir)
     assert E._curation(spark, sf_dir) is st
     frames = [v for v in st.values() if hasattr(v, "unpersist")]
     assert len(frames) == 5 and all(f.is_cached for f in frames)
+    docs = E._docs(spark, sf_dir)
+    assert docs.is_cached
     E._curation_reset(spark)
     assert not any(f.is_cached for f in frames)
+    assert not docs.is_cached
+    fresh = E._docs(spark, sf_dir)
+    assert fresh is not docs and fresh.is_cached
     assert E._curation(spark, sf_dir) is not st
+
+
+def _new_jobs(spark, action) -> list[int]:
+    """Ids of the jobs `action` runs, from any thread (a job group
+    does not reach the build's pool threads)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    action()
+    bus.waitUntilEmpty()
+    return sorted(set(sc.statusTracker().getJobIdsForGroup()) - before)
+
+
+def _rdd_names(cluster) -> list[str]:
+    """Names of the RDDs in an RDD operation graph cluster, nested
+    clusters included."""
+    def items(seq):
+        it = seq.iterator()
+        while it.hasNext():
+            yield it.next()
+    names = [n.name() for n in items(cluster.childNodes())]
+    for c in items(cluster.childClusters()):
+        names += _rdd_names(c)
+    return names
+
+
+def test_rebuild_scans_documents_once(spark, sf_dir):
+    # every build stage reads the one materialized documents frame: a
+    # rebuild after the reset runs one stage that scans the parquet
+    # (the shuffle to hash(doc_id, n)); skipped stages do not count
+    import __spark_entry__ as E
+    sc = spark.sparkContext
+    st, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    E._curation(spark, sf_dir)
+    E._curation_reset(spark)
+    jobs = _new_jobs(spark, lambda: E._curation(spark, sf_dir))
+    ran = {s for j in jobs for s in st.getJobInfo(j).stageIds
+           if st.getStageInfo(s).numCompletedTasks > 0}
+    scans = [s for s in ran if "FileScanRDD" in _rdd_names(
+        store.operationGraphForStage(s).rootCluster())]
+    assert len(scans) == 1, scans
 
 
 def test_registry_verifies_match_standalone_kernels(spark, sf_dir, docs):

@@ -917,6 +917,26 @@ def test_warm_verify_consumer_runs_one_job(spark, name):
     assert _jobs_launched(spark, q[0]) == 1
 
 
+# --- the documents frame: persisted and materialized once --------------------
+
+def test_docs_reader_plans_no_doc_id_exchange(spark, private_sf):
+    # _docs hands out a materialized cache known to be hash(doc_id, n):
+    # the (doc_id, shingle) aggregate of a reader built right after a
+    # cold memo build needs no exchange of its own to cluster by doc_id
+    import __spark_entry__ as E
+    from etl_portfolio_tracker_spark.io import read_table
+    from etl_portfolio_tracker_spark.operators import dedup as DD
+    sf = private_sf("documents")
+    docs = E._docs(spark, sf)
+    q = DD.shingles(docs)
+    assert "Exchange hashpartitioning(doc_id" not in _outside_cache(
+        physical_plan(q))
+    # spread()'s partition probe reads the known layout: no job
+    assert _jobs_during(spark, lambda: DD.shingles(docs)) == 0
+    assert q.count() == DD.shingles(
+        read_table(spark, sf, "documents")).count()
+
+
 # --- connected components: one job per round ---------------------------------
 
 # warm-band-key jobs of dedup_clusters at sf0.001: the star-edge and
@@ -1005,8 +1025,12 @@ def test_cc_every_round_runs_one_job_of_one_task(
                          for j in jobs])
         return out[0]
 
-    monkeypatch.setattr(DD, "iter_checkpoint", counted)
     labels0, edges = cc_graph([(i, i + 1) for i in range(5)], 8)
+    # a call: the label checkpoint, the neighbourhood's one job (no
+    # join, so no broadcast job) and the six rounds below
+    assert _jobs_during(
+        spark, lambda: DD.min_label_components(labels0, edges)) == 8
+    monkeypatch.setattr(DD, "iter_checkpoint", counted)
     DD.min_label_components(labels0, edges).collect()
     # [0] is the initial labels, then one call per round (the
     # neighbourhood is built before the first): path 0..5 takes 5

@@ -365,6 +365,41 @@ def test_min_label_components_random_graphs_vs_union_find(spark):
         assert got == expected, f"trial {trial} mismatch"
 
 
+def test_min_label_components_ignores_edges_off_the_label_rows(spark):
+    # edges may touch nodes that are no label rows (including
+    # self-loops on them): those edges are ignored and the output
+    # keeps exactly the label rows, with the union-find's labels of
+    # the graph restricted to them
+    import random
+    from pyspark.sql import functions as F
+    rng = random.Random(13)
+    for trial in range(3):
+        labelled = sorted(rng.sample(range(40), 25))
+        pairs = sorted({tuple(sorted(rng.sample(range(40), 2)))
+                        for _ in range(rng.randint(10, 40))})
+        loops = [(x, x) for x in rng.sample(range(40), 5)]
+        parent = {x: x for x in labelled}
+
+        def find(x):
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for a, b in pairs:
+            if a in parent and b in parent:
+                ra, rb = find(a), find(b)
+                parent[max(ra, rb)] = min(ra, rb)
+        edges = spark.createDataFrame(
+            pairs + [(b, a) for a, b in pairs] + loops,
+            "doc_a long, doc_b long")
+        labels0 = spark.createDataFrame(
+            [(x,) for x in labelled], "doc_id long") \
+            .withColumn("cluster_id", F.col("doc_id"))
+        got = {r["doc_id"]: r["cluster_id"]
+               for r in DD.min_label_components(labels0, edges).collect()}
+        assert got == {x: find(x) for x in labelled}, trial
+
+
 def test_resize_media_plumbing(spark):
     d = docs_df(spark, ["x" * 1000, "short"])
     media = MM.docs_as_media(d)
